@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Post-hoc CHANGE FEED between two committed versions of a published
@@ -121,209 +122,199 @@ object ChangeFeed {
 
   /** COMPOSE two consecutive feeds: the net row-level changes A→C from
     * the feeds of A→B and B→C, without touching either snapshot — the
-    * algebra behind CDC topic/ledger compaction (Kafka log compaction,
-    * Debezium event folding): a consumer that fell N batches behind
-    * applies ONE composed feed instead of N, and the composed feed is
-    * sized by the NET delta (a row inserted then deleted vanishes; a
-    * row changed then reverted vanishes; a chain of updates collapses
-    * to one preimage/postimage pair).
+    * two-feed case of [[composeAll]], which holds the construction and
+    * its contract. Identity (differential-tested on random version
+    * chains): `compose(diff(a,b), diff(b,c), k)` is row-for-row
+    * `diff(a,c, k)`. */
+  def compose(ab: DataFrame, bc: DataFrame, key: Seq[String],
+              strict: Boolean = false): DataFrame =
+    composeAll(Seq(ab, bc), key, strict)
+
+  /** Thrown by a strict [[composeAll]]: the feeds at chain positions
+    * `before` and `after` (0-based, `before < after`) are not
+    * consecutive — `after` does not start from the state `before` left.
+    * The positions let a caller name its own batches. */
+  final class BrokenSeam(message: String, val before: Int, val after: Int)
+    extends IllegalArgumentException(message)
+
+  /** Fold a CHAIN of consecutive feeds into the net feed — the algebra
+    * behind CDC topic/ledger compaction (Kafka log compaction, Debezium
+    * event folding): a consumer that fell N batches behind applies ONE
+    * composed feed instead of N, and the composed feed is sized by the
+    * NET delta (a row inserted then deleted vanishes; a row changed then
+    * reverted vanishes; a chain of updates collapses to one
+    * preimage/postimage pair). Identity (differential-tested):
+    * `composeAll(diff(v0,v1) … diff(vN−1,vN), k)` is row-for-row
+    * `diff(v0, vN, k)`. Since [[IncrementalAgg.maintain]] consumes
+    * exactly this shape, maintenance over the composed feed equals
+    * maintenance over the chain — N batches of MV work collapse with it.
     *
-    * Identity (differential-tested on random version chains):
-    * `compose(diff(a,b), diff(b,c), k)` is row-for-row `diff(a,c, k)`.
-    * Since [[IncrementalAgg.maintain]] consumes exactly this shape,
-    * maintenance over the composed feed equals maintenance over the
-    * chain — N batches of MV work collapse with it.
+    * Construction: ONE keyed aggregate, whatever N is. Every feed row
+    * is tagged with its feed's chain position and its rank within the
+    * feed (pre-image rows — delete, update_preimage — before post-image
+    * rows — insert, update_postimage), the tagged feeds are unioned, and
+    * the union is grouped by key. The net from-image is the pre-image of
+    * the key's EARLIEST touching row (none if that row is an insert, the
+    * key was born in the chain); the net to-image is the post-image of
+    * its LATEST touching row (none if that row is a delete). `min`/`max`
+    * over `struct(position, rank, image)` pick both without a join.
+    * Equal from- and to-images (born-then-died, changed-then-reverted)
+    * emit nothing — exactly diff's verdict.
     *
-    * Preconditions: both inputs are [[diff]] outputs over the same
-    * schema and key, and CONSECUTIVE (`ab`'s `to` side is `bc`'s
-    * `from` side). By default violations surface as impossible rows
-    * downstream (the same contract as maintain's corrupted-feed
-    * surfacing); callers that cannot trust the chain pass
-    * `strict = true` to fail loudly instead: for every key present in
-    * both folds, `ab`'s post-state must null-safely equal `bc`'s
-    * pre-state, and the NULL-keyed passthrough (below) must cancel
-    * exactly — one extra feed-sized filter per input, the family's
-    * opt-in-verification posture ([[diff]]'s `requireUniqueKey`,
-    * [[applyTo]]'s `strict`).
+    * Preconditions: every input is a [[diff]] output over the same
+    * schema and key, in chain order, and CONSECUTIVE (feed i's `to`
+    * side is feed i+1's `from` side). By default violations surface as
+    * impossible rows downstream (the same contract as maintain's
+    * corrupted-feed surfacing); callers that cannot trust the chain
+    * pass `strict = true` to fail loudly instead with a [[BrokenSeam]]
+    * naming the offending key and the two feed positions. Strict orders
+    * each key's touches by (position, rank) and checks every adjacent
+    * pair from different feeds with one `lag`: the state the earlier
+    * feed leaves (its post-image; none after a delete) must null-safely
+    * equal the state the later feed starts from (its pre-image; none
+    * before an insert). Every valid chain passes, and every key touched
+    * by two feeds is checked — a key touched by only one feed asserts
+    * nothing about its neighbours, a limit inherent to any feed-only
+    * check. The check is one eager action, run before returning.
     *
     * Rows with NULL key columns never match across [[diff]]'s join, so
-    * a feed carries each of them as its own delete/insert row; the
-    * keyed fold below would collapse them all into ONE pair (SQL GROUP
-    * BY treats NULL as one group), so they route AROUND it: the net
-    * A→C feed's NULL-keyed portion is exactly `ab`'s deletes (A's
-    * NULL-keyed rows) plus `bc`'s inserts (C's NULL-keyed rows), while
-    * `ab`'s inserts and `bc`'s deletes — both multisets of B's
-    * NULL-keyed rows — cancel. This keeps the row-for-row
-    * `diff(a, c)` identity on NULL-keyed rows too.
+    * a feed carries each of them as its own delete/insert row; a keyed
+    * GROUP BY would collapse them all into ONE pair, so they route
+    * AROUND it: the net feed's NULL-keyed portion is exactly the first
+    * feed's deletes (v0's NULL-keyed rows) plus the last feed's inserts
+    * (vN's), while every intermediate version's NULL-keyed rows cancel
+    * (inserted by one feed, deleted by the next). This keeps the
+    * row-for-row `diff(v0, vN)` identity on NULL-keyed rows too. The
+    * passthrough reads the first and last feeds a second time, so it
+    * is built ONLY when some key column is schema-nullable — provably
+    * NULL-free keys keep the single-reference plan.
     *
     * CAVEAT — the lenient-mode surfacing contract has a NULL-keyed
     * exception: on a MISPAIRED (non-consecutive) chain, keyed
     * violations surface as impossible rows downstream, but the
-    * NULL-keyed cancellation above drops `ab`'s NULL-keyed inserts and
-    * `bc`'s NULL-keyed deletes UNCONDITIONALLY — an unmatched residue
-    * between them (possible only on a broken chain) vanishes silently
-    * rather than surfacing. Chains whose tables carry NULL-keyed rows
-    * and whose pairing is untrusted should pass `strict = true`, which
-    * verifies exactly this multiset match.
+    * NULL-keyed cancellation drops intermediate NULL-keyed rows
+    * UNCONDITIONALLY — an unmatched residue at a seam (possible only on
+    * a broken chain) vanishes silently rather than surfacing. Strict
+    * mode verifies exactly this: at every seam, the multiset of NULL-keyed
+    * rows one feed inserts must equal the multiset the next feed deletes
+    * (one aggregate over the NULL-keyed rows, built only for nullable
+    * keys and checked by the same eager action).
     *
-    * Scale: one key-shuffle per feed (each folded to at most one
-    * (preimage, postimage) pair per key — map-side partial agg), then
-    * one keyed full-outer merge; work ∝ the feeds, never a snapshot. */
-  def compose(ab: DataFrame, bc: DataFrame, key: Seq[String],
-              strict: Boolean = false): DataFrame = {
-    Seq(ab, bc).foreach(f => require(f.columns.contains("_change_type"),
-      "compose inputs must be ChangeFeed.diff outputs (missing _change_type)"))
-    require(ab.columns.sorted.sameElements(bc.columns.sorted),
-      s"schema mismatch: ab=${ab.columns.sorted.mkString(",")} " +
-        s"bc=${bc.columns.sorted.mkString(",")}")
-    val cols = bc.columns.toSeq.filterNot(_ == "_change_type")
+    * Scale: one key shuffle of the union (map-side partial aggregation
+    * folds each key's touches before it), then a streaming aggregate;
+    * work ∝ the feeds, never a snapshot, and the plan has no join and
+    * no intermediate materialization at any N. A single feed is
+    * returned as is. */
+  def composeAll(feeds: Seq[DataFrame], key: Seq[String],
+                 strict: Boolean = false): DataFrame = {
+    require(feeds.nonEmpty, "no feeds")
+    val last = feeds.last
+    feeds.zipWithIndex.foreach { case (f, i) =>
+      require(f.columns.contains("_change_type"),
+        "compose inputs must be ChangeFeed.diff outputs (missing _change_type)")
+      require(f.columns.sorted.sameElements(last.columns.sorted),
+        s"schema mismatch: feed $i=${f.columns.sorted.mkString(",")} " +
+          s"feed ${feeds.size - 1}=${last.columns.sorted.mkString(",")}")
+    }
+    val cols = last.columns.toSeq.filterNot(_ == "_change_type")
     val missing = key.filterNot(cols.contains)
     require(missing.isEmpty, s"key columns absent from feed: ${missing.mkString(",")}")
-    // NULL-keyed rows bypass the keyed fold entirely (Scaladoc above):
-    // ab's deletes and bc's inserts pass through verbatim; ab's inserts
-    // and bc's deletes (both = B's NULL-keyed rows) cancel by dropping.
-    // The passthrough references each input feed a second time (the
-    // one plan shape that can't be expressed single-pass: cancellation
-    // is a multiset match between ab's inserts and bc's deletes), so
-    // it is built ONLY when some key column is schema-nullable —
-    // provably NULL-free keys keep the single-reference plan
-    // (PlanShapeSpec's snapshot guard watches the join count).
-    val keysNullable = key.exists(k =>
-      ab.schema(ab.schema.fieldIndex(k)).nullable ||
-        bc.schema(bc.schema.fieldIndex(k)).nullable)
-    val nullKeyed = key.map(col(_).isNull).reduce(_ || _)
-    if (strict && keysNullable) {
-      // the NULL-keyed cancellation is exact only on a consecutive
-      // chain: ab's inserted NULL-keyed rows must BE bc's deleted ones
-      // (same multiset). Feed-sized: NULL-keyed rows only.
-      val abIns = ab.filter(nullKeyed &&
-        col("_change_type").isin("insert", "update_postimage")).drop("_change_type")
-      val bcDel = bc.filter(nullKeyed &&
-        col("_change_type").isin("delete", "update_preimage")).drop("_change_type")
-      val odd = abIns.exceptAll(bcDel).limit(1).collect() ++
-        bcDel.exceptAll(abIns).limit(1).collect()
-      require(odd.isEmpty,
-        s"feeds are not consecutive: NULL-keyed row " +
-          s"(${odd.head.toSeq.mkString(",")}) appears in only one feed's " +
-          "B-side — ab's to-side is not bc's from-side")
+    if (feeds.size == 1) last
+    else {
+      val keysNullable = key.exists(k => feeds.exists(_.schema(k).nullable))
+      val nullKeyed = anyNull(key)
+      val pos = col("_cf_pos")
+      val rank = col("_cf_rank")
+      val img = col("_cf_img")
+      // every keyed row of the chain, tagged with where it sits
+      val touches = feeds.zipWithIndex.map { case (f, i) =>
+        (if (keysNullable) f.filter(!nullKeyed) else f).select(key.map(col) ++
+          Seq(lit(i).as("_cf_pos"), when(isPre, 0).otherwise(1).as("_cf_rank"),
+            struct(cols.map(col): _*).as("_cf_img")): _*)
+      }.reduce(_ union _)
+      if (strict) requireConsecutive(feeds, touches, key, cols, keysNullable)
+      def at(image: Column): Column = struct(pos, rank, image.as("img"))
+      def row(image: Column, changeType: String): Column =
+        struct(cols.map(n => image.getField(n).as(n)) :+
+          lit(changeType).as("_change_type"): _*)
+      val keyed = touches.groupBy(key.map(col): _*)
+        .agg(min(at(when(rank === 0, img))).getField("img").as("f"),
+          max(at(when(rank === 1, img))).getField("img").as("t"))
+        .filter(!(col("f") <=> col("t")))
+        .select(explode(
+          when(col("f").isNull, array(row(col("t"), "insert")))
+            .when(col("t").isNull, array(row(col("f"), "delete")))
+            .otherwise(array(row(col("f"), "update_preimage"),
+              row(col("t"), "update_postimage")))).as("_r"))
+        .select(col("_r.*"))
+      if (!keysNullable) keyed
+      // the NULL-keyed passthrough (see Scaladoc): v0's NULL-keyed rows
+      // stay deletes, vN's stay inserts, the intermediates' cancel
+      else keyed
+        .unionByName(feeds.head.filter(nullKeyed && isPre))
+        .unionByName(last.filter(nullKeyed && !isPre))
     }
-    // fold each feed to one (from-image, to-image) pair per key: the
-    // preimage/delete row is the key's state BEFORE the feed, the
-    // postimage/insert row its state AFTER; max() picks the single
-    // non-null struct (a valid feed has at most one of each per key)
-    def fold(feed: DataFrame): DataFrame =
-      (if (keysNullable) feed.filter(!nullKeyed) else feed)
-        .groupBy(key.map(col): _*).agg(
-        max(when(col("_change_type").isin("delete", "update_preimage"),
-          struct(cols.map(col): _*))).as("from_img"),
-        max(when(col("_change_type").isin("insert", "update_postimage"),
-          struct(cols.map(col): _*))).as("to_img"))
-        .withColumn("_cf_present", lit(true))
-    val a = fold(ab).as("a")
-    val c = fold(bc).as("c")
-    val joinCond = key.map(k => col(s"a.$k") <=> col(s"c.$k")).reduce(_ && _)
-    if (strict) {
-      // consecutiveness on keyed rows: for every key in BOTH folds,
-      // ab's post-state must null-safely equal bc's pre-state (a key
-      // in only one fold asserts nothing about the other feed's B
-      // side). One extra fold-sized inner join, opt-in only.
-      val mis = a.join(c, joinCond, "inner")
-        .filter(!(col("a.to_img") <=> col("c.from_img")))
-        .select(key.map(k => col(s"a.$k")): _*).limit(1).collect()
-      require(mis.isEmpty,
-        s"feeds are not consecutive: key " +
-          s"(${mis.headOption.map(_.toSeq.mkString(",")).getOrElse("")}) " +
-          "leaves ab in a state bc does not start from")
-    }
-    val aPresent = col("a._cf_present").isNotNull
-    val cPresent = col("c._cf_present").isNotNull
-    // net from-image: the key's state before A→B if the key appears
-    // there (NULL = born in A→B), else its state before B→C; net
-    // to-image symmetrically from the later feed first
-    val fromNet = when(aPresent, col("a.from_img")).otherwise(col("c.from_img"))
-    val toNet = when(cPresent, col("c.to_img")).otherwise(col("a.to_img"))
-    def row(img: Column, changeType: String): Column =
-      struct(cols.map(n => img.getField(n).as(n)) :+
-        lit(changeType).as("_change_type"): _*)
-    val keyed = a.join(c, joinCond, "full_outer")
-      .select(fromNet.as("f"), toNet.as("t"))
-      // born-then-died (both null) and changed-then-reverted (equal)
-      // produce NO net change — exactly diff(a, c)'s verdict
-      .filter(!(col("f") <=> col("t")))
-      .select(explode(
-        when(col("f").isNull, array(row(col("t"), "insert")))
-          .when(col("t").isNull, array(row(col("f"), "delete")))
-          .otherwise(array(row(col("f"), "update_preimage"),
-            row(col("t"), "update_postimage")))).as("_r"))
-      .select(col("_r.*"))
-    if (!keysNullable) keyed
-    // the NULL-keyed passthrough (see Scaladoc): A's NULL-keyed rows
-    // stay deletes, C's stay inserts, B's cancel
-    else keyed
-      .unionByName(ab.filter(nullKeyed &&
-        col("_change_type").isin("delete", "update_preimage")))
-      .unionByName(bc.filter(nullKeyed &&
-        col("_change_type").isin("insert", "update_postimage")))
   }
 
-  /** Fold a CHAIN of consecutive feeds into the net feed — [[compose]]
-    * applied as a LOG-DEPTH TREE rather than a left-nested reduce. A
-    * left fold of N feeds builds an N-deep plan (each compose is two
-    * keyed folds + a full-outer merge), and Catalyst's analysis time
-    * and driver memory grow superlinearly with plan depth — a consumer
-    * catching up after thousands of batches would compile a
-    * multi-thousand-stage lineage before running anything. The tree
-    * keeps depth at ⌈log₂ N⌉, and every `checkpointEvery` levels each
-    * intermediate is materialized via `localCheckpoint` (lineage
-    * truncated to a block-manager scan), so the ANALYZED plan between
-    * materializations stays ≤ 2^checkpointEvery leaves regardless of N.
-    *
-    * `strict` forwards to every pairwise [[compose]]: each tree seam is
-    * verified where verification is possible — a key is checked at a
-    * seam iff it carries net changes on BOTH sides (a key silent on
-    * either side asserts nothing about that side's B-state; this
-    * partial coverage is inherent to any feed-only check, left fold or
-    * tree alike). A violated seam fails loudly at the level that joins
-    * it.
-    *
-    * `materialize` is the lineage-truncation primitive. The default,
-    * `localCheckpoint(true)`, stores blocks in EXECUTOR memory/disk
-    * with NO recompute path — right for a single-JVM or
-    * static-allocation run, but on a cluster with executor loss or
-    * dynamic deallocation a lost block permanently fails the catch-up
-    * mid-tree (the r16 ADVICE hazard). Cluster runs should pass a
-    * RELIABLE materializer instead — `_.checkpoint(true)` with a
-    * checkpoint dir set, or a write-then-read through the job's
-    * scratch storage; any identity-preserving function works. */
-  def composeAll(feeds: Seq[DataFrame], key: Seq[String],
-                 strict: Boolean = false,
-                 checkpointEvery: Int = 4,
-                 materialize: DataFrame => DataFrame =
-                   _.localCheckpoint(true)): DataFrame = {
-    require(feeds.nonEmpty, "no feeds")
-    require(checkpointEvery > 0, s"checkpointEvery must be positive: $checkpointEvery")
-    var level = feeds.toVector
-    var depth = 0
-    while (level.size > 1) {
-      level = level.grouped(2).map {
-        case Vector(x, y) => compose(x, y, key, strict)
-        case Vector(x) => x
-        case _ => throw new IllegalStateException("grouped(2) invariant")
-      }.toVector
-      depth += 1
-      // truncate lineage while more levels remain; the LAST level is
-      // left lazy so the caller controls its materialization (persist,
-      // write, further composition)
-      if (depth % checkpointEvery == 0 && level.size > 1)
-        level = level.map(materialize)
+  /** A feed row carrying the key's state BEFORE its feed (delete,
+    * update_preimage); the others carry the state after it. */
+  private val isPre = col("_change_type").isin("delete", "update_preimage")
+
+  private def anyNull(key: Seq[String]): Column = key.map(col(_).isNull).reduce(_ || _)
+
+  /** [[composeAll]]'s strict check, as one eager action: the first seam
+    * a keyed touch or a NULL-keyed multiset breaks, thrown as a
+    * [[BrokenSeam]]. */
+  private def requireConsecutive(feeds: Seq[DataFrame], touches: DataFrame,
+                                 key: Seq[String], cols: Seq[String],
+                                 keysNullable: Boolean): Unit = {
+    val prev = lag(struct(col("_cf_pos"), col("_cf_rank"), col("_cf_img")), 1)
+      .over(Window.partitionBy(key.map(col): _*).orderBy("_cf_pos", "_cf_rank"))
+    // the state the earlier feed leaves vs the state the later one
+    // starts from; a touch whose predecessor is its own feed's pre-image
+    // is the second half of an update pair and asserts nothing
+    val keyedBreaks = touches.select(col("*"), prev.as("_cf_prev"))
+      .filter(col("_cf_prev").isNotNull &&
+        col("_cf_prev._cf_pos") =!= col("_cf_pos") &&
+        !(when(col("_cf_prev._cf_rank") === 1, col("_cf_prev._cf_img")) <=>
+          when(col("_cf_rank") === 0, col("_cf_img"))))
+      .select(lit("key").as("what"),
+        concat_ws(",", key.map(col(_).cast("string")): _*).as("which"),
+        col("_cf_prev._cf_pos").as("before"), col("_cf_pos").as("after"))
+    val breaks =
+      if (!keysNullable) keyedBreaks
+      else {
+        // seam s joins feed s and feed s+1: feed s's NULL-keyed inserts
+        // count +1 at s, feed s+1's NULL-keyed deletes −1 at s; a
+        // consecutive chain nets every (seam, row) to zero. The first
+        // feed's deletes and the last feed's inserts face no seam.
+        val signed = feeds.zipWithIndex.map { case (f, i) =>
+          f.filter(anyNull(key)).select(cols.map(col) ++ Seq(
+            when(isPre, i - 1).otherwise(i).as("_cf_seam"),
+            when(isPre, -1).otherwise(1).as("_cf_sign")): _*)
+        }.reduce(_ union _)
+          .filter(col("_cf_seam").between(0, feeds.size - 2))
+        keyedBreaks.union(signed
+          .groupBy((col("_cf_seam") +: cols.map(col)): _*)
+          .agg(sum("_cf_sign").as("_cf_net"))
+          .filter(col("_cf_net") =!= 0)
+          .select(lit("NULL-keyed row").as("what"),
+            concat_ws(",", cols.map(c =>
+              coalesce(col(c).cast("string"), lit("null"))): _*).as("which"),
+            col("_cf_seam").as("before"), (col("_cf_seam") + 1).as("after")))
+      }
+    breaks.limit(1).collect().headOption.foreach { b =>
+      throw new BrokenSeam(
+        s"feeds are not consecutive: ${b.getString(0)} (${b.getString(1)}) " +
+          s"leaves feed ${b.getInt(2)} in a state feed ${b.getInt(3)} " +
+          "does not start from", b.getInt(2), b.getInt(3))
     }
-    level.head
   }
 
   /** APPLY a feed: replay the row-level changes onto the snapshot they
     * were diffed FROM, reconstructing the snapshot they lead TO — the
     * inverse leg of the CDC algebra ([[diff]] produces a feed,
-    * [[compose]] folds feeds, [[IncrementalAgg.maintain]] consumes one
+    * [[composeAll]] folds feeds, [[IncrementalAgg.maintain]] consumes one
     * into an aggregate; `applyTo` consumes one into the TABLE itself).
     * Identity (differential-tested on random version chains):
     * `applyTo(a, diff(a, b, k), k)` is row-for-row `b`, and composing

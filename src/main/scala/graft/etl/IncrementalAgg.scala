@@ -1407,7 +1407,7 @@ object IncrementalAgg {
 
   /** CATCH-UP application: a consumer that fell N batches behind
     * applies them as ONE maintenance round — the unapplied feeds fold
-    * into the net feed ([[ChangeFeed.compose]]), every view advances
+    * into the net feed ([[ChangeFeed.composeAll]]), every view advances
     * once against it, and ALL the composed-in batch ids join the
     * ledger in the same atomic publish. Exactly-once therefore
     * survives arbitrary regrouping: a later replay of any INDIVIDUAL
@@ -1415,20 +1415,20 @@ object IncrementalAgg {
     * every view and the ledger at the pre-catch-up version together.
     *
     * `feeds` are (batchId, feed) in CHAIN ORDER and must be
-    * consecutive ([[ChangeFeed.compose]]'s contract). An
+    * consecutive ([[ChangeFeed.composeAll]]'s contract). An
     * already-applied PREFIX is skipped (the checkpoint-replay shape: a
     * restart re-offers batches the crashed run published); an applied
     * batch AFTER an unapplied one cannot happen on a consistent chain
     * and fails loudly instead of silently re-applying or skipping.
     * Returns how many batches were applied (0 = nothing to do).
     *
-    * Cost: N−1 feed-sized folds + ONE maintenance round, versus N
-    * maintenance rounds and N publishes batch-by-batch — the
-    * compaction a woken-up consumer's ops schedule wants. The fold is
-    * [[ChangeFeed.composeAll]]'s log-depth tree with periodic lineage
-    * truncation, so a catch-up after thousands of batches compiles
-    * bounded plans rather than an N-deep lineage; `strict` forwards to
-    * every pairwise compose (fail loudly on a broken chain seam). */
+    * Cost: ONE keyed aggregate over the unioned feeds + ONE
+    * maintenance round, versus N maintenance rounds and N publishes
+    * batch-by-batch — the compaction a woken-up consumer's ops schedule
+    * wants. `strict` forwards to [[ChangeFeed.composeAll]] (one eager
+    * consecutiveness check over the whole chain); a broken seam fails
+    * loudly naming this store's root and the batch ids on both sides
+    * of it, and nothing is committed. */
   def applyComposedMulti(spark: SparkSession, root: String,
                          feeds: Seq[(Long, DataFrame)], key: Seq[String],
                          views: Seq[TargetSpec],
@@ -1458,12 +1458,17 @@ object IncrementalAgg {
         "chain does not match the ledger")
     if (todo.isEmpty) 0
     else {
-      // materialized once for the round, same as applyOnceMulti — the
-      // composed plan is a TREE of keyed merges (log-depth, lineage
-      // truncated every few levels), still the worst case for
-      // re-evaluation
-      val netFeed = ChangeFeed.composeAll(todo.map(_._2), key, strict)
-        .persist()
+      // materialized once for the round, same as applyOnceMulti: every
+      // view reads the net feed, and re-evaluating it would re-read and
+      // re-aggregate the whole backlog per view
+      val netFeed =
+        try ChangeFeed.composeAll(todo.map(_._2), key, strict).persist()
+        catch {
+          case e: ChangeFeed.BrokenSeam =>
+            throw new IllegalArgumentException(
+              s"catch-up of $root: batch ${todo(e.before)._1} → batch " +
+                s"${todo(e.after)._1}: ${e.getMessage}", e)
+        }
       try maintainRound(spark, root, snap, views.map(v => (v, netFeed)),
         (applied ++ todo.map(_._1)).toDF("batch_id"))
       finally { netFeed.unpersist(); () }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
 
 /** Committed plan-snapshot artifact (round-9 verdict ask #6): a
   * normalized `explain("formatted")` per battery query, written to
@@ -85,13 +85,24 @@ object PlanSnapshot {
   /** Render every battery query's normalized plan at the suite fixture
     * scale. AQE toggled off for the duration. */
   def renderAll(spark: SparkSession, sfDir: String,
-                names: Option[Set[String]] = None): Seq[(String, String)] = {
+                names: Option[Set[String]] = None): Seq[(String, String)] =
+    planAll(spark, sfDir, names).map { case (n, _, text) => n -> text }
+
+  /** Every battery query's executed plan and its normalized formatted
+    * text, each query planned ONCE (the text renders the same executed
+    * plan). AQE toggled off for the duration, so both are the final
+    * static tree. */
+  def planAll(spark: SparkSession, sfDir: String,
+              names: Option[Set[String]] = None): Seq[(String, SparkPlan, String)] = {
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       graft.SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (n, _) => names.forall(_(n)) }
-        .map { case (n, fn) => n -> formatted(fn(spark, sfDir)) }
+        .map { case (n, fn) =>
+          val df = fn(spark, sfDir)
+          (n, df.queryExecution.executedPlan, formatted(df))
+        }
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 }

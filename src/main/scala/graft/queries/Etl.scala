@@ -299,8 +299,8 @@ object Etl {
     // survives batch 2 — but decile 1 rows UPDATED in batch 1 are
     // DELETED by batch 2, collapsing to plain deletes) net out exactly.
     // The feeds are MATERIALIZED once (o12's convention — the shape a
-    // ledger consumer actually holds): compose references each input
-    // twice when the key is schema-nullable (its NULL-keyed
+    // ledger consumer actually holds): compose reads the first and last
+    // feed a second time when the key is schema-nullable (its NULL-keyed
     // passthrough), so its inputs should be stored feeds, not lazy
     // diff plans that would re-run their joins per reference.
     // The oracle computes the direct v1↔v3 classification relationally

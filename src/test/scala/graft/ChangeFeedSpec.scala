@@ -152,6 +152,29 @@ class ChangeFeedSpec extends SparkSuite {
         ChangeFeed.diff(b, c, Seq("id")), Seq("id")), Seq("id"))
       .as[(Option[Int], String)].collect().toSet
     assert(replayed === Set((Some(1), "k!"), (None, "w"), (None, "v")))
+    // a 4-feed chain: each intermediate version's NULL-keyed rows
+    // cancel at their seams, the net is still diff(first, last)
+    val d = Seq((Some(1), "k!!"), (None, "w"), (None, "u")).toDF("id", "name")
+    val e = Seq((Some(2), "k2"), (None, "u"), (None, "t"), (None, "t"))
+      .toDF("id", "name")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Option[Int], String, String)].collect().sortBy(_.toString).toSeq
+    val chain = Seq(a, b, c, d, e).sliding(2).map {
+      case Seq(x, y) => ChangeFeed.diff(x, y, Seq("id"))
+    }.toSeq
+    assert(rows(ChangeFeed.composeAll(chain, Seq("id"), strict = true)) ===
+      rows(ChangeFeed.diff(a, e, Seq("id"))))
+    // strict rejects a broken NULL-keyed seam in the MIDDLE of the chain:
+    // the third feed starts from a version whose NULL-keyed rows are not
+    // the ones the second feed left
+    val notC = Seq((Some(1), "k!"), (None, "w"), (None, "other")).toDF("id", "name")
+    val broken = chain.updated(2, ChangeFeed.diff(notC, d, Seq("id")))
+    val err = intercept[ChangeFeed.BrokenSeam] {
+      ChangeFeed.composeAll(broken, Seq("id"), strict = true)
+    }
+    assert(err.getMessage.contains("not consecutive") &&
+      err.getMessage.contains("NULL-keyed"), err.getMessage)
+    assert((err.before, err.after) === ((1, 2)))
   }
 
   test("compose strict mode verifies consecutiveness: a broken keyed " +
@@ -188,13 +211,13 @@ class ChangeFeedSpec extends SparkSuite {
     assert(e2.getMessage.contains("not consecutive"))
   }
 
-  test("composeAll tree-folds a 64-feed chain to the direct diff, " +
-    "strict passes on the valid chain and names the broken seam on a " +
+  test("composeAll folds a 64-feed chain in one keyed pass to the direct " +
+    "diff, strict passes on the valid chain and names the broken seam on a " +
     "shuffled one") {
     // a deterministic 65-version chain over 40 keys: key 0 is a
     // counter EVERY version bumps (so every adjacent-feed seam shares
     // a key — a swapped chain is detectable; strict's coverage is
-    // inherently limited to keys changed on both sides of a seam);
+    // inherently limited to keys touched by two feeds);
     // version j additionally renames key j%40, inserts key 1000+j and
     // deletes key 1000+j-3 (transients later net out)
     def version(i: Int): Seq[(Int, String, Long)] = {
@@ -209,41 +232,64 @@ class ChangeFeedSpec extends SparkSuite {
       baseKeys ++ transient
     }
     def df(i: Int) = version(i).toDF("id", "name", "score")
-    val feeds = (0 until 64).map(i =>
-      ChangeFeed.diff(df(i), df(i + 1), Seq("id")))
+    // the 64 diffs are evaluated ONCE (one job) and held as stored feeds
+    // — the shape a catching-up consumer holds — in two schemas: the
+    // diff's own (nullable key, so the NULL-keyed strict check runs too)
+    // and a NON-nullable key for the plan pin below
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val diffs = (0 until 64).map(i => ChangeFeed.diff(df(i), df(i + 1), Seq("id")))
+    val rowsAt = diffs.zipWithIndex.map { case (f, i) => f.withColumn("_i", lit(i)) }
+      .reduce(_ union _).collect().groupBy(_.getInt(4))
+      .map { case (i, rs) => i -> rs.map(r => Row.fromSeq(r.toSeq.init)).toSeq }
+    def stored(schema: StructType) = (0 until 64).map(i =>
+      spark.createDataFrame(java.util.Arrays.asList(rowsAt.getOrElse(i, Nil): _*), schema))
+    val feeds = stored(diffs.head.schema)
     val net = ChangeFeed.composeAll(feeds, Seq("id"), strict = true)
     val direct = ChangeFeed.diff(df(0), df(64), Seq("id"))
     assert(net.as[(Int, String, Long, String)].collect().toSet ===
       direct.as[(Int, String, Long, String)].collect().toSet)
-    // a shuffled chain (two adjacent feeds swapped) breaks a seam —
-    // strict fails loudly instead of composing garbage
+    // a shuffled chain (two adjacent feeds swapped) breaks the counter's
+    // seams at positions 9|10, 10|11 and 11|12 — strict fails loudly,
+    // naming one of them, instead of composing garbage
     val shuffled = feeds.updated(10, feeds(11)).updated(11, feeds(10))
-    val e = intercept[IllegalArgumentException] {
+    val e = intercept[ChangeFeed.BrokenSeam] {
       ChangeFeed.composeAll(shuffled, Seq("id"), strict = true)
-        .count()
     }
     assert(e.getMessage.contains("not consecutive"))
-    // singleton chain is the identity, checkpointEvery must be positive
+    assert(Set((9, 10), (10, 11), (11, 12))((e.before, e.after)),
+      s"unexpected seam ${e.before}|${e.after}: ${e.getMessage}")
+    assert(e.getMessage.contains(s"feed ${e.before} ") &&
+      e.getMessage.contains(s"feed ${e.after} "), e.getMessage)
+    // singleton chain is the identity
     assert(ChangeFeed.composeAll(Seq(feeds.head), Seq("id")) eq feeds.head)
-    assert(intercept[IllegalArgumentException] {
-      ChangeFeed.composeAll(feeds, Seq("id"), checkpointEvery = 0)
-    }.getMessage.contains("checkpointEvery"))
-    // a caller-supplied RELIABLE materializer (the cluster-safe
-    // alternative to localCheckpoint — the r16 ADVICE: executor-held
-    // blocks have no recompute path under executor loss) plugs into
-    // every truncation level and preserves the identity. 64 leaves at
-    // checkpointEvery=2: truncation at depth 2 (16 nodes) and depth 4
-    // (4 nodes) — the last level (depth 6) and singleton levels stay
-    // lazy by contract.
-    val materialized = new java.util.concurrent.atomic.AtomicInteger
-    val reliable = ChangeFeed.composeAll(feeds, Seq("id"), strict = false,
-      checkpointEvery = 2,
-      materialize = df => { materialized.incrementAndGet(); df.localCheckpoint(true) })
-    assert(materialized.get === 20,
-      s"expected 16 + 4 truncations, saw ${materialized.get}")
-    assert(reliable.as[(Int, String, Long, String)].collect().toSet ===
-      direct.as[(Int, String, Long, String)].collect().toSet,
-      "a custom materializer must not change the composed feed")
+    // plan pin: with a NON-nullable key the composed feed is one keyed
+    // aggregate — no join and exactly one key exchange, at N = 64 the
+    // same as at N = 8 (AQE off so the tree is final)
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val nonNullKey = stored(StructType(feeds.head.schema.map {
+      case StructField("id", t, _, m) => StructField("id", t, nullable = false, m)
+      case f => f
+    }))
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      for (n <- Seq(8, 64)) {
+        val plan = ChangeFeed.composeAll(nonNullKey.take(n), Seq("id"), strict = true)
+          .queryExecution.executedPlan
+        assert(plan.collect { case j: BaseJoinExec => j }.isEmpty,
+          s"N=$n composed plan has a join:\n$plan")
+        val exchanges = plan.collect { case x: ShuffleExchangeExec => x }
+        assert(exchanges.size === 1 &&
+          exchanges.head.outputPartitioning.isInstanceOf[HashPartitioning],
+          s"N=$n composed plan must shuffle once, on the key:\n$plan")
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert(ChangeFeed.composeAll(nonNullKey, Seq("id"), strict = true)
+      .as[(Int, String, Long, String)].collect().toSet ===
+      direct.as[(Int, String, Long, String)].collect().toSet)
   }
 
   test("point-in-time reconstruction: an old snapshot plus retained " +

@@ -672,6 +672,18 @@ class DifferentialSpec extends SparkSuite {
       val direct = ChangeFeed.diff(df(v1, 5), df(v3, 7), Seq("id"))
         .as[(Long, Option[String], Option[Double], String)].collect().toSet
       assert(composed === direct, "compose(diff,diff) != direct diff")
+      // one version further, through the strict chain fold: the three
+      // consecutive feeds pass the consecutiveness check and net to the
+      // direct v1 -> v4 diff
+      val v4 = mutate(v3, salt + 2)
+      val chained = ChangeFeed.composeAll(Seq(
+        ChangeFeed.diff(df(v1, 2), df(v2, 6), Seq("id")),
+        ChangeFeed.diff(df(v2, 4), df(v3, 3), Seq("id")),
+        ChangeFeed.diff(df(v3, 5), df(v4, 2), Seq("id"))), Seq("id"), strict = true)
+        .as[(Long, Option[String], Option[Double], String)].collect().toSet
+      assert(chained === ChangeFeed.diff(df(v1, 3), df(v4, 6), Seq("id"))
+        .as[(Long, Option[String], Option[Double], String)].collect().toSet,
+        "composeAll(strict) over three feeds != direct diff")
       // and maintenance over the COMPOSED feed equals the chain's end
       val viaComposed = IncrementalAgg.maintain(
         IncrementalAgg.aggregate(df(v1, 3), grp, sums),

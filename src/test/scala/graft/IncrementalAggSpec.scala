@@ -436,7 +436,7 @@ class IncrementalAggSpec extends SparkSuite {
     }.getMessage.contains("chain inconsistency"))
   }
 
-  test("catch-up at N = 64: the tree-composed round equals 64 batch-level " +
+  test("catch-up at N = 64: the one-pass composed round equals 64 batch-level " +
     "states, commits ONE version, and a misordered chain fails loudly " +
     "under strict") {
     import graft.etl.{AtomicPublish, IncrementalAgg}
@@ -456,9 +456,7 @@ class IncrementalAggSpec extends SparkSuite {
     val views = Seq(ViewSpec("state", grp, sums, numBuckets = 4))
     val root = s"$base/main"
     IncrementalAgg.publishInitialMulti(spark, root, df(v(0)), views)
-    // the whole backlog lands as ONE maintenance round, ONE version —
-    // and the left-nested-reduce pathology this construction replaces
-    // would have compiled a 64-deep compose lineage here
+    // the whole backlog lands as ONE maintenance round, ONE version
     assert(IncrementalAgg.applyComposedMulti(spark, root, feeds, Seq("id"),
       views) === 64)
     assert(AtomicPublish.currentVersion(spark, root) === Some(1L))
@@ -471,11 +469,17 @@ class IncrementalAggSpec extends SparkSuite {
     // under strict instead of composing garbage into the store
     val root2 = s"$base/misordered"
     IncrementalAgg.publishInitialMulti(spark, root2, df(v(0)), views)
+    // — naming the store and the batch ids on both sides of the seam
+    // (the counter breaks at positions 29|30, 30|31 and 31|32, which
+    // hold batches 29, 31, 30, 32 after the swap)
     val swapped = feeds.updated(30, feeds(31)).updated(31, feeds(30))
-    assert(intercept[IllegalArgumentException] {
+    val msg = intercept[IllegalArgumentException] {
       IncrementalAgg.applyComposedMulti(spark, root2, swapped, Seq("id"),
         views, strict = true)
-    }.getMessage.contains("not consecutive"))
+    }.getMessage
+    assert(msg.contains("not consecutive") && msg.contains(root2), msg)
+    assert(Seq("batch 29 → batch 31", "batch 31 → batch 30",
+      "batch 30 → batch 32").exists(msg.contains), msg)
     // nothing committed on the failed store
     assert(AtomicPublish.currentVersion(spark, root2) === Some(0L))
     assert(snap(IncrementalAgg.readState(spark, root2)) === snap(state(v(0))))

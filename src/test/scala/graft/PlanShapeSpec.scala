@@ -8,6 +8,11 @@ class PlanShapeSpec extends SparkSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
+  /** Every battery query planned once under AQE off — its executed plan
+    * and its normalized formatted text — shared by the battery sweep and
+    * the snapshot guard. */
+  private lazy val battery = graft.plans.PlanSnapshot.planAll(spark, sf)
+
   test("star join broadcasts every dimension (no shuffle on the fact side)") {
     val p = plan("j1_star_join")
     assert(p.contains("BroadcastHashJoin"), "dims must broadcast")
@@ -324,35 +329,29 @@ class PlanShapeSpec extends SparkSuite {
       // the salting demos force the shuffle path (broadcast would
       // dissolve the skew being demonstrated)
       "skew_salted_join" -> "deliberate salted shuffle join")
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val threshold = 10L * 1024 * 1024 // the session autoBroadcast default
-      val problems = scala.collection.mutable.Buffer[String]()
-      import org.apache.spark.sql.execution.joins.{CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
-      def minSideEstimate(l: org.apache.spark.sql.execution.SparkPlan,
-                          r: org.apache.spark.sql.execution.SparkPlan): Option[BigInt] = {
-        def est(p: org.apache.spark.sql.execution.SparkPlan): Option[BigInt] =
-          p.logicalLink.map(_.stats.sizeInBytes)
-        for (a <- est(l); b <- est(r)) yield a.min(b)
+    val threshold = 10L * 1024 * 1024 // the session autoBroadcast default
+    val problems = scala.collection.mutable.Buffer[String]()
+    import org.apache.spark.sql.execution.joins.{CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
+    def minSideEstimate(l: org.apache.spark.sql.execution.SparkPlan,
+                        r: org.apache.spark.sql.execution.SparkPlan): Option[BigInt] = {
+      def est(p: org.apache.spark.sql.execution.SparkPlan): Option[BigInt] =
+        p.logicalLink.map(_.stats.sizeInBytes)
+      for (a <- est(l); b <- est(r)) yield a.min(b)
+    }
+    for ((name, phys, _) <- battery if !exempt.contains(name)) {
+      phys.foreach {
+        case _: CartesianProductExec =>
+          problems += s"$name: CartesianProductExec"
+        case j: SortMergeJoinExec =>
+          minSideEstimate(j.left, j.right).filter(_ < threshold).foreach(sz =>
+            problems += s"$name: SMJ with ${sz}B side (should broadcast)")
+        case j: ShuffledHashJoinExec =>
+          minSideEstimate(j.left, j.right).filter(_ < threshold).foreach(sz =>
+            problems += s"$name: SHJ with ${sz}B side (should broadcast)")
+        case _ =>
       }
-      for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
-           if !exempt.contains(name)) {
-        val phys = fn(spark, sf).queryExecution.executedPlan
-        phys.foreach {
-          case _: CartesianProductExec =>
-            problems += s"$name: CartesianProductExec"
-          case j: SortMergeJoinExec =>
-            minSideEstimate(j.left, j.right).filter(_ < threshold).foreach(sz =>
-              problems += s"$name: SMJ with ${sz}B side (should broadcast)")
-          case j: ShuffledHashJoinExec =>
-            minSideEstimate(j.left, j.right).filter(_ < threshold).foreach(sz =>
-              problems += s"$name: SHJ with ${sz}B side (should broadcast)")
-          case _ =>
-        }
-      }
-      assert(problems.isEmpty, s"plan sweep violations:\n${problems.mkString("\n")}")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
+    assert(problems.isEmpty, s"plan sweep violations:\n${problems.mkString("\n")}")
   }
 
   test("snapshot guard: no query's join/exchange structure degraded vs committed PLANS/") {
@@ -371,7 +370,7 @@ class PlanShapeSpec extends SparkSuite {
     val committed = dir.listFiles().filter(_.getName.endsWith(".txt"))
       .map(f => f.getName.stripSuffix(".txt") ->
         new String(java.nio.file.Files.readAllBytes(f.toPath))).toMap
-    val live = PlanSnapshot.renderAll(spark, sf).toMap
+    val live = battery.map { case (name, _, text) => name -> text }.toMap
     val missing = live.keySet -- committed.keySet
     assert(missing.isEmpty,
       s"queries without a committed plan snapshot (re-run PlanDump): " +
