@@ -32,12 +32,6 @@ object VectorUdfs {
     case _ => v.toArray
   }
 
-  @inline private[graft] def arrI(v: scala.collection.Seq[Int]): Array[Int] = v match {
-    case null => null
-    case w: scala.collection.immutable.ArraySeq.ofInt => w.unsafeArray
-    case _ => v.toArray
-  }
-
   /** Squared norm: left fold of x². */
   val norm2: UserDefinedFunction = udf { (v0: Seq[Float]) =>
     val v = arrF(v0)

@@ -66,7 +66,12 @@ import graft.ops.VectorSearch.{IvfModel, IvfPqModel}
   * follows the tombstone) — order-correct replication of the corpus,
   * not a global ban list. [[serve]] applies tombstones as ONE
   * broadcast anti join per timeline block (delta-sized — tombstones
-  * are changed ids, never the corpus); [[compactSegments]] APPLIES a
+  * are changed ids, never the corpus). The broadcast side is the raw
+  * tombstone read, with no dedup stage: an anti join ignores duplicate
+  * build keys, and [[applyDeletes]] already writes each tombstone
+  * distinct. Segments and tombstones are read with their schemas
+  * pinned ([[segSchema]], [[tsSchema]]), so loading a version plans
+  * without a Spark job. [[compactSegments]] APPLIES a
   * merged segment's later tombstones physically (the merged output
   * moves to the end of the timeline, already clean), and drops
   * tombstones no segment precedes — repeated compaction converges the
@@ -120,6 +125,18 @@ object AnnIndexStore {
   private val metaSchema = StructType(Seq(
     StructField("amax", DoubleType, nullable = false),
     StructField("n_sub", IntegerType, nullable = false)))
+
+  /** A coded segment: [[VectorSearch.ivfPqEncode]]'s output schema
+    * (IncrementalIndexSpec pins the match). Reading segments with it
+    * skips parquet schema inference, which is a Spark job per read. */
+  private[graft] val segSchema = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("cid", LongType),
+    StructField("__codes", ArrayType(IntegerType, containsNull = false))))
+
+  /** A tombstone: the deleted ids. Dirs written before ids were cast
+    * on write may hold INT32 ids; the parquet reader widens them. */
+  private val tsSchema = StructType(Seq(StructField("vec_id", LongType)))
 
   private val manifestSchema = StructType(Seq(
     StructField("seq", IntegerType, nullable = false),
@@ -415,12 +432,37 @@ object AnnIndexStore {
     val m = readManifest(spark, snap)
     if (tombstoneId.exists(m.applied.contains)) return snap.version
     val id = tombstoneId.getOrElse(s"ts-${java.util.UUID.randomUUID}")
-    deletes.select(org.apache.spark.sql.functions.col(idCol).as("vec_id"))
+    deletes.select(org.apache.spark.sql.functions.col(idCol).cast("long").as("vec_id"))
       .distinct()
       .write.mode("overwrite").parquet(s"$root/ts/$id")
     publishVersion(spark, root,
       Manifest(m.modelId, m.entries :+ ("ts" -> id), m.applied :+ id),
       expectedBase = Some(Some(snap.version)))
+  }
+
+  /** Each segment of the manifest timeline, in order, paired with the
+    * tombstones AFTER it — the ones that hide its ids. */
+  private def segmentsWithLaterTombstones(m: Manifest): Seq[(String, List[String])] = {
+    var tsAfter = List.empty[String]
+    m.entries.reverse.flatMap {
+      case ("ts", r) => tsAfter = r :: tsAfter; None
+      case ("seg", r) => Some(r -> tsAfter)
+      case _ => None
+    }.reverse
+  }
+
+  /** Segments `segs` minus the ids in tombstones `ts`: one pinned-schema
+    * union and, when `ts` is non-empty, ONE broadcast anti join against
+    * the raw tombstone read (no dedup: an anti join ignores duplicate
+    * build keys). */
+  private def liveRows(spark: SparkSession, root: String, segs: Seq[String],
+                       ts: Seq[String]): DataFrame = {
+    val df = spark.read.schema(segSchema).parquet(segs.map(s => s"$root/seg/$s"): _*)
+    if (ts.isEmpty) df
+    else df.join(
+      org.apache.spark.sql.functions.broadcast(
+        spark.read.schema(tsSchema).parquet(ts.map(t => s"$root/ts/$t"): _*)),
+      Seq("vec_id"), "left_anti")
   }
 
   /** The version's served index: the manifest's segments with every
@@ -429,29 +471,14 @@ object AnnIndexStore {
     * (tombstone-free manifests reduce to the plain segment union). */
   private def indexFrame(spark: SparkSession, root: String,
                          m: Manifest): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    // each segment paired with the tombstones AFTER it in the timeline
-    val segWithTs: Seq[(String, List[String])] = {
-      var tsAfter = List.empty[String]
-      m.entries.reverse.flatMap {
-        case ("ts", r) => tsAfter = r :: tsAfter; None
-        case ("seg", r) => Some(r -> tsAfter)
-        case _ => None
-      }.reverse
-    }
-    val blocks = segWithTs.foldLeft(Vector.empty[(Vector[String], List[String])]) {
-      case (acc, (seg, ts)) if acc.nonEmpty && acc.last._2 == ts =>
-        acc.init :+ ((acc.last._1 :+ seg, ts))
-      case (acc, (seg, ts)) => acc :+ ((Vector(seg), ts))
-    }
-    blocks.map { case (segs, ts) =>
-      val df = spark.read.parquet(segs.map(s => s"$root/seg/$s"): _*)
-      if (ts.isEmpty) df
-      else df.join(
-        broadcast(spark.read.parquet(ts.map(t => s"$root/ts/$t"): _*)
-          .select(col("vec_id")).distinct()),
-        Seq("vec_id"), "left_anti")
-    }.reduce(_.unionByName(_))
+    val blocks = segmentsWithLaterTombstones(m)
+      .foldLeft(Vector.empty[(Vector[String], List[String])]) {
+        case (acc, (seg, ts)) if acc.nonEmpty && acc.last._2 == ts =>
+          acc.init :+ ((acc.last._1 :+ seg, ts))
+        case (acc, (seg, ts)) => acc :+ ((Vector(seg), ts))
+      }
+    blocks.map { case (segs, ts) => liveRows(spark, root, segs, ts) }
+      .reduce(_.unionByName(_))
   }
 
   /** Load the serving state back from a committed snapshot (the current
@@ -459,7 +486,9 @@ object AnnIndexStore {
     * tables collect to the driver once per (session, model-id) — the
     * same driver-side footprint training produced; the index is the
     * lazy union of the manifest's segments for
-    * [[VectorSearch.ivfPqServe]]. */
+    * [[VectorSearch.ivfPqServe]]. Once the model is memoized, a load
+    * starts no Spark job: the manifest is read driver-side and the
+    * segment and tombstone reads have pinned schemas. */
   def load(spark: SparkSession, root: String,
            version: Option[Long] = None): (IvfPqModel, DataFrame) = {
     val snap = version.fold(AtomicPublish.snapshot(spark, root))(
@@ -542,22 +571,8 @@ object AnnIndexStore {
     // merged output lands at the END of the timeline, so it must be
     // physically clean (Lucene's deletes-applied-on-merge). With no
     // tombstones this reduces to the plain narrow byte-copy.
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val segWithTs: Seq[(String, List[String])] = {
-      var tsAfter = List.empty[String]
-      m.entries.reverse.flatMap {
-        case ("ts", r) => tsAfter = r :: tsAfter; None
-        case ("seg", r) => Some(r -> tsAfter)
-        case _ => None
-      }.reverse
-    }
-    val merged = segWithTs.collect { case (s, ts) if doomedSet(s) =>
-      val df = spark.read.parquet(s"$root/seg/$s")
-      if (ts.isEmpty) df
-      else df.join(
-        broadcast(spark.read.parquet(ts.map(t => s"$root/ts/$t"): _*)
-          .select(col("vec_id")).distinct()),
-        Seq("vec_id"), "left_anti")
+    val merged = segmentsWithLaterTombstones(m).collect {
+      case (s, ts) if doomedSet(s) => liveRows(spark, root, Seq(s), ts)
     }.reduce(_.unionByName(_)).coalesce(nOut)
     val newSeg = writeSegment(spark, root, merged)
     // survivors keep their timeline positions (their tombstone

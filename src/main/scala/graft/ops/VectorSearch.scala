@@ -727,8 +727,11 @@ object VectorSearch {
     *     codeword id, so ties are deterministic);
     *  4. ADC scoring: each query precomputes its `nSub`×`K` integer
     *     distance LUT (one small array per query, broadcast); a
-    *     candidate's distance is `nSub` LUT lookups summed — the scan
-    *     touches only the 2-byte codes, never the vectors.
+    *     candidate's distance is the codegen'd `pq_adc` kernel
+    *     ([[graft.functions.PqAdc]]): `nSub` in-place LUT reads at the
+    *     candidate's codes, summed — O(nSub) per candidate, never a
+    *     copy of the LUT, and the scan touches only the codes, never
+    *     the vectors.
     *
     * All distances are exact BIGINTs end-to-end (quantize → encode →
     * LUT → sum), so ranking and the DuckDB oracle replay are
@@ -760,15 +763,7 @@ object VectorSearch {
     val seedRows = quantize(codebookSeeds, "__sid").orderBy("__sid")
       .collect().map(_.getSeq[Long](1).toArray)
     require(seedRows.nonEmpty, "codebook seed set is empty")
-    val dim = seedRows.head.length
-    require(dim % nSub == 0, s"dim $dim not divisible into $nSub subspaces")
-    val sd = dim / nSub
-    val kCw = seedRows.length
-    // flat codebook: cb(m*kCw + cw)(j) — one primitive-array kernel per
-    // row beats the equivalent nested HOF lambdas ~10× (higher-order
-    // array expressions evaluate interpreted with per-element boxing;
-    // this is the same compute-bound-kernel justification as
-    // TokenProfileUdf/WinnowUdf)
+    NativeVectorExpressions.register(spark)
     val coder = pqCoder(seedRows, nSub)
     val c = quantize(corpus, "vec_id")
       .withColumn("__codes", coder.encode(col("__qv")))
@@ -787,12 +782,17 @@ object VectorSearch {
 
   /** The PQ kernel triple shared by [[pqTopK]] and [[ivfPqTopK]]:
     * encode (argmin codeword per subspace, first-min tie-break), LUT
-    * (the query's distance to every (subspace, codeword)), ADC (sum of
-    * LUT entries at the candidate's codes). All exact-BIGINT. */
+    * (the query's distance to every (subspace, codeword)), ADC (the
+    * `pq_adc` kernel: sum of LUT entries at the candidate's codes;
+    * needs [[NativeVectorExpressions.register]] on the session). All
+    * exact-BIGINT. */
   private final case class PqCoder(
       encode: org.apache.spark.sql.expressions.UserDefinedFunction,
       lut: org.apache.spark.sql.expressions.UserDefinedFunction,
-      adc: org.apache.spark.sql.expressions.UserDefinedFunction)
+      nSub: Int, kCw: Int) {
+    def adc(codes: Column, lut: Column): Column =
+      call_function("pq_adc", codes, lut, lit(nSub), lit(kCw))
+  }
 
   private def pqCoder(seedRows: Array[Array[Long]], nSub: Int): PqCoder = {
     val dim = seedRows.head.length
@@ -836,14 +836,7 @@ object VectorSearch {
       }
       out
     }
-    val adcUdf = udf { (codes0: scala.collection.Seq[Int], lut0: scala.collection.Seq[Long]) =>
-      val codes = graft.functions.VectorUdfs.arrI(codes0)
-      val lut = graft.functions.VectorUdfs.arrL(lut0)
-      var s = 0L; var m = 0
-      while (m < nSub) { s += lut(m * kCw + codes(m)); m += 1 }
-      s
-    }
-    PqCoder(encodeUdf, lutUdf, adcUdf)
+    PqCoder(encodeUdf, lutUdf, nSub, kCw)
   }
 
   /** Composite IVF-PQ ANN top-k — the IVFADC shape of the PQ paper
@@ -895,13 +888,15 @@ object VectorSearch {
 
   /** Serve a query batch against a pre-built [[ivfPqEncode]] index:
     * queries carry their LUT, probe `nprobe` lists, and candidates
-    * score by exact-BIGINT ADC only. */
+    * score by exact-BIGINT ADC only — the codegen'd `pq_adc` kernel,
+    * `nSub` in-place LUT reads per candidate. */
   def ivfPqServe(model: IvfPqModel, encoded: DataFrame, queries: DataFrame,
                  idCol: String, vecCol: String, k: Int = 10, nprobe: Int = 3,
                  excludeSelf: Boolean = true): DataFrame = {
     require(nprobe >= 1 && nprobe <= model.ivf.cents.length,
       s"nprobe ($nprobe) must be in [1, kLists=${model.ivf.cents.length}]")
     val probes = probeUdf(model.ivf.cents, nprobe)
+    NativeVectorExpressions.register(encoded.sparkSession)
     val coder = pqCoder(model.seedRows, model.nSub)
     val q = quantized(queries, vecCol, model.ivf.amaxVal, idCol, "query_id")
       .withColumn("__lut", coder.lut(col("__qv")))

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * The rehearsal also caught a real scaling bug: every vector UDF kernel
   * indexed into Spark's List-backed `Seq` rows — an invisible O(dim²)
   * at 64 dims that pinned executors at 768 (fixed in VectorUdfs.arrF/
-  * arrL/arrI; this suite went from >15 min to ~40 s).
+  * arrL; this suite went from >15 min to ~40 s).
   */
 class HighDimEmbeddingSpec extends SparkSuite {
   import spark.implicits._

@@ -1,6 +1,13 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
 import org.apache.spark.sql.functions.col
 
 import graft.ops.{AnnIndexStore, VectorSearch}
@@ -450,5 +457,114 @@ class IncrementalIndexSpec extends SparkSuite {
     val served = norm(AnnIndexStore.serve(spark, root, queries,
       "vec_id", "embedding", k = topK, nprobe = nprobe))
     assert(served == current, "segment GC changed the current serve")
+  }
+
+  test("ivfPqEncode's output schema is the pinned segment schema") {
+    val (emb, model, _) = train()
+    val encoded = VectorSearch.ivfPqEncode(model, emb, "vec_id", "embedding")
+    def shape(t: org.apache.spark.sql.types.StructType) =
+      t.fields.map(f => f.name -> f.dataType).toSeq
+    assert(shape(encoded.schema) == shape(AnnIndexStore.segSchema),
+      "segments are read with AnnIndexStore.segSchema; it must match what ivfPqEncode writes")
+  }
+
+  /** Spark jobs `body` starts on this thread. They carry a probe job
+    * group; a sentinel job in a second group, once the listener sees
+    * it, proves every earlier job start has been delivered. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"probe-${java.util.UUID.randomUUID}"
+    val counted = new AtomicInteger(0)
+    val sentinelSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => counted.incrementAndGet()
+          case Some(g) if g == s"$group-sentinel" => sentinelSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobs started by the probed call")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-sentinel", "listener sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(sentinelSeen.await(60, TimeUnit.SECONDS), "listener never saw the sentinel job")
+      counted.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A two-segment store whose first segment is tombstoned. */
+  private def tombstonedStore() = {
+    val root = freshRoot()
+    val (emb, model, queries) = train()
+    val n = emb.count()
+    AnnIndexStore.publish(spark, root, model, VectorSearch.ivfPqEncode(model,
+      emb.filter(col("vec_id") < n / 2), "vec_id", "embedding"))
+    AnnIndexStore.applyDeletes(spark, root,
+      emb.filter(col("vec_id") % 5 === 1).select("vec_id"), "vec_id")
+    AnnIndexStore.appendEncode(spark, root,
+      emb.filter(col("vec_id") >= n / 2), "vec_id", "embedding")
+    (root, emb, model, queries)
+  }
+
+  test("load starts no Spark job once the model is memoized, tombstones included") {
+    val (root, _, _, _) = tombstonedStore()
+    AnnIndexStore.load(spark, root) // first load of the lineage collects the model
+    var index: DataFrame = null
+    assert(jobsStartedBy { index = AnnIndexStore.load(spark, root)._2 } == 0,
+      "loading a committed version must not start a Spark job")
+    assert(index.columns.toSeq == AnnIndexStore.segSchema.fieldNames.toSeq)
+  }
+
+  test("a tombstoned serve broadcasts the raw tombstone read: no aggregate or exchange under it") {
+    val (root, emb, model, queries) = tombstonedStore()
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val served = AnnIndexStore.serve(spark, root, queries, "vec_id", "embedding",
+        k = topK, nprobe = nprobe)
+      val plan = served.queryExecution.executedPlan
+      val tsBroadcasts = plan.collect {
+        case b: BroadcastExchangeExec if b.collectFirst {
+          case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.toString.contains(s"$root/ts/")) => s
+        }.isDefined => b
+      }
+      assert(tsBroadcasts.size == 1, s"expected one tombstone broadcast:\n$plan")
+      val under = tsBroadcasts.head.child.collect {
+        case a: BaseAggregateExec => a.nodeName
+        case e: Exchange => e.nodeName
+      }
+      assert(under.isEmpty, s"tombstone broadcast side has $under:\n$plan")
+      assert(norm(served) == norm(VectorSearch.ivfPqServe(model,
+        VectorSearch.ivfPqEncode(model, emb.filter(col("vec_id") % 5 =!= 1 ||
+          col("vec_id") >= emb.count() / 2), "vec_id", "embedding"),
+        queries, "vec_id", "embedding", topK, nprobe)))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
+  test("a tombstone from an int-typed delete frame is written as bigint and hides its ids; " +
+    "an INT32 tombstone dir still reads") {
+    val root = freshRoot()
+    val (emb, model, queries) = train()
+    AnnIndexStore.publish(spark, root, model,
+      VectorSearch.ivfPqEncode(model, emb, "vec_id", "embedding"))
+    val dead = emb.filter(col("vec_id") % 6 === 2).select(col("vec_id").cast("int"))
+    AnnIndexStore.applyDeletes(spark, root, dead, "vec_id", tombstoneId = Some("ts-int"))
+    assert(spark.read.parquet(s"$root/ts/ts-int").schema("vec_id").dataType ==
+      org.apache.spark.sql.types.LongType)
+    val expect = norm(VectorSearch.ivfPqServe(model,
+      VectorSearch.ivfPqEncode(model, emb.filter(col("vec_id") % 6 =!= 2),
+        "vec_id", "embedding"), queries, "vec_id", "embedding", topK, nprobe))
+    def served() = norm(AnnIndexStore.serve(spark, root, queries,
+      "vec_id", "embedding", k = topK, nprobe = nprobe))
+    assert(served() == expect, "int-typed deletes still served")
+    // a tombstone dir written before ids were cast on write holds INT32
+    dead.distinct().write.mode("overwrite").parquet(s"$root/ts/ts-int")
+    assert(spark.read.parquet(s"$root/ts/ts-int").schema("vec_id").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    assert(served() == expect, "an INT32 tombstone dir no longer hides its ids")
   }
 }
