@@ -1,7 +1,6 @@
 package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Post-hoc CHANGE FEED between two committed versions of a published
@@ -161,52 +160,58 @@ object ChangeFeed {
     * Equal from- and to-images (born-then-died, changed-then-reverted)
     * emit nothing — exactly diff's verdict.
     *
+    * Rows with NULL key columns never match across [[diff]]'s join, so
+    * a feed carries each as its own delete/insert row, which a group by
+    * key alone would collapse into ONE pair. NULL-keyed rows are
+    * therefore grouped by their whole image too, each distinct row a
+    * multiset of its own: its net is its copies in v0 (the first feed's
+    * deletes) and in vN (the last feed's inserts), while every
+    * intermediate version's copies cancel (inserted by one feed,
+    * deleted by the next) — the row-for-row `diff(v0, vN)` identity
+    * again. The emitted image comes from the aggregate over the rows,
+    * not from the grouping key, which Spark normalizes (-0.0, NaN).
+    *
     * Preconditions: every input is a [[diff]] output over the same
     * schema and key, in chain order, and CONSECUTIVE (feed i's `to`
     * side is feed i+1's `from` side). By default violations surface as
     * impossible rows downstream (the same contract as maintain's
     * corrupted-feed surfacing); callers that cannot trust the chain
     * pass `strict = true` to fail loudly instead with a [[BrokenSeam]]
-    * naming the offending key and the two feed positions. Strict orders
-    * each key's touches by (position, rank) and checks every adjacent
-    * pair from different feeds with one `lag`: the state the earlier
-    * feed leaves (its post-image; none after a delete) must null-safely
-    * equal the state the later feed starts from (its pre-image; none
-    * before an insert). Every valid chain passes, and every key touched
-    * by two feeds is checked — a key touched by only one feed asserts
-    * nothing about its neighbours, a limit inherent to any feed-only
-    * check. The check is one eager action, run before returning.
+    * naming the offending key or NULL-keyed row and the two feed
+    * positions. Strict keeps each group's touches, sorted by (position,
+    * rank), in the same aggregate: every adjacent pair of a key's
+    * touches from different feeds must chain (the earlier feed's
+    * post-image, none after a delete, null-safely equals the later
+    * feed's pre-image, none before an insert), and at every seam a
+    * NULL-keyed row's copies one feed inserts must be those the next
+    * deletes. Every valid chain passes, and every key touched by two
+    * feeds is checked — a key touched by only one feed asserts nothing
+    * about its neighbours, a limit inherent to any feed-only check. The
+    * check is one eager action (the earliest break over the aggregate)
+    * before the lazy net feed returns, so lazy inputs are evaluated
+    * twice; [[IncrementalAgg.applyComposedMulti]] caches in between.
     *
-    * Rows with NULL key columns never match across [[diff]]'s join, so
-    * a feed carries each of them as its own delete/insert row; a keyed
-    * GROUP BY would collapse them all into ONE pair, so they route
-    * AROUND it: the net feed's NULL-keyed portion is exactly the first
-    * feed's deletes (v0's NULL-keyed rows) plus the last feed's inserts
-    * (vN's), while every intermediate version's NULL-keyed rows cancel
-    * (inserted by one feed, deleted by the next). This keeps the
-    * row-for-row `diff(v0, vN)` identity on NULL-keyed rows too. The
-    * passthrough reads the first and last feeds a second time, so it
-    * is built ONLY when some key column is schema-nullable — provably
-    * NULL-free keys keep the single-reference plan.
+    * CAVEAT — in lenient mode a MISPAIRED chain's NULL-keyed residue at
+    * a seam (possible only on a broken chain) vanishes silently rather
+    * than surfacing downstream like keyed violations do; strict mode
+    * verifies exactly this.
     *
-    * CAVEAT — the lenient-mode surfacing contract has a NULL-keyed
-    * exception: on a MISPAIRED (non-consecutive) chain, keyed
-    * violations surface as impossible rows downstream, but the
-    * NULL-keyed cancellation drops intermediate NULL-keyed rows
-    * UNCONDITIONALLY — an unmatched residue at a seam (possible only on
-    * a broken chain) vanishes silently rather than surfacing. Strict
-    * mode verifies exactly this: at every seam, the multiset of NULL-keyed
-    * rows one feed inserts must equal the multiset the next feed deletes
-    * (one aggregate over the NULL-keyed rows, built only for nullable
-    * keys and checked by the same eager action).
-    *
-    * Scale: one key shuffle of the union (map-side partial aggregation
-    * folds each key's touches before it), then a streaming aggregate;
-    * work ∝ the feeds, never a snapshot, and the plan has no join and
-    * no intermediate materialization at any N. A single feed is
-    * returned as is. */
+    * Scale: one key shuffle of the union, nullable keys and strict mode
+    * included (lenient: map-side partial aggregation folds each key's
+    * touches before it; strict holds ≤ 2N touches per key), then a
+    * streaming aggregate; work ∝ the feeds, never a snapshot, each feed
+    * is read once, and the plan has no join and no intermediate
+    * materialization at any N. A single feed is returned as is. */
   def composeAll(feeds: Seq[DataFrame], key: Seq[String],
-                 strict: Boolean = false): DataFrame = {
+                 strict: Boolean = false): DataFrame =
+    composeHeld(feeds, key, strict)(identity)
+
+  /** [[composeAll]] with `hold` applied to its aggregate (a single
+    * feed: the feed) before the strict check and the net read it; a
+    * caller that persists it there reads the chain exactly once. */
+  private[etl] def composeHeld(feeds: Seq[DataFrame], key: Seq[String],
+                               strict: Boolean)(
+                               hold: DataFrame => DataFrame): DataFrame = {
     require(feeds.nonEmpty, "no feeds")
     val last = feeds.last
     feeds.zipWithIndex.foreach { case (f, i) =>
@@ -219,40 +224,45 @@ object ChangeFeed {
     val cols = last.columns.toSeq.filterNot(_ == "_change_type")
     val missing = key.filterNot(cols.contains)
     require(missing.isEmpty, s"key columns absent from feed: ${missing.mkString(",")}")
-    if (feeds.size == 1) last
+    if (feeds.size == 1) hold(last)
     else {
-      val keysNullable = key.exists(k => feeds.exists(_.schema(k).nullable))
-      val nullKeyed = anyNull(key)
-      val pos = col("_cf_pos")
-      val rank = col("_cf_rank")
-      val img = col("_cf_img")
-      // every keyed row of the chain, tagged with where it sits
-      val touches = feeds.zipWithIndex.map { case (f, i) =>
-        (if (keysNullable) f.filter(!nullKeyed) else f).select(key.map(col) ++
-          Seq(lit(i).as("_cf_pos"), when(isPre, 0).otherwise(1).as("_cf_rank"),
-            struct(cols.map(col): _*).as("_cf_img")): _*)
+      val touch = struct(col("_cf_pos"), col("_cf_rank"), col("_cf_img"))
+      def copies(pos: Int, rank: Int): Column =
+        count(when(col("_cf_pos") === pos && col("_cf_rank") === rank, 1))
+      val agg = feeds.zipWithIndex.map { case (f, i) =>
+        f.select(key.map(col) ++ Seq(lit(i).as("_cf_pos"),
+          when(isPre, 0).otherwise(1).as("_cf_rank"),
+          struct(cols.map(col): _*).as("_cf_img")): _*)
       }.reduce(_ union _)
-      if (strict) requireConsecutive(feeds, touches, key, cols, keysNullable)
-      def at(image: Column): Column = struct(pos, rank, image.as("img"))
+        .groupBy(key.map(col) :+ when(anyNull(key), col("_cf_img")).as("_cf_nimg"): _*)
+        .agg(min(touch).as("_cf_first"), Seq(max(touch).as("_cf_last"),
+          copies(0, 0).as("_cf_dels"), copies(feeds.size - 1, 1).as("_cf_ins")) ++
+          (if (strict) Seq(sort_array(collect_list(touch)).as("_cf_ts")) else Nil): _*)
+      val held = hold(if (!strict) agg else agg
+        .select(col("*"), firstBreak(key, cols, feeds.size).as("_cf_break")).drop("_cf_ts"))
+      // the strict check: the earliest break over the aggregate
+      if (strict) Option(held.agg(min("_cf_break")).head().getStruct(0)).foreach { b =>
+        throw new BrokenSeam(
+          s"feeds are not consecutive: ${b.getString(2)} (${b.getString(3)}) " +
+            s"leaves feed ${b.getInt(0)} in a state feed ${b.getInt(1)} " +
+            "does not start from", b.getInt(0), b.getInt(1))
+      }
+      val f = when(col("_cf_first._cf_rank") === 0, col("_cf_first._cf_img"))
+      val t = when(col("_cf_last._cf_rank") === 1, col("_cf_last._cf_img"))
       def row(image: Column, changeType: String): Column =
         struct(cols.map(n => image.getField(n).as(n)) :+
           lit(changeType).as("_change_type"): _*)
-      val keyed = touches.groupBy(key.map(col): _*)
-        .agg(min(at(when(rank === 0, img))).getField("img").as("f"),
-          max(at(when(rank === 1, img))).getField("img").as("t"))
-        .filter(!(col("f") <=> col("t")))
+      held.filter(nullKeyed || !(f <=> t))
         .select(explode(
-          when(col("f").isNull, array(row(col("t"), "insert")))
-            .when(col("t").isNull, array(row(col("f"), "delete")))
-            .otherwise(array(row(col("f"), "update_preimage"),
-              row(col("t"), "update_postimage")))).as("_r"))
+          // a NULL-keyed row: its copies in v0 deleted, in vN inserted
+          when(nullKeyed, concat(
+            array_repeat(row(f, "delete"), col("_cf_dels").cast("int")),
+            array_repeat(row(t, "insert"), col("_cf_ins").cast("int"))))
+            .when(f.isNull, array(row(t, "insert")))
+            .when(t.isNull, array(row(f, "delete")))
+            .otherwise(array(row(f, "update_preimage"),
+              row(t, "update_postimage")))).as("_r"))
         .select(col("_r.*"))
-      if (!keysNullable) keyed
-      // the NULL-keyed passthrough (see Scaladoc): v0's NULL-keyed rows
-      // stay deletes, vN's stay inserts, the intermediates' cancel
-      else keyed
-        .unionByName(feeds.head.filter(nullKeyed && isPre))
-        .unionByName(last.filter(nullKeyed && !isPre))
     }
   }
 
@@ -262,53 +272,41 @@ object ChangeFeed {
 
   private def anyNull(key: Seq[String]): Column = key.map(col(_).isNull).reduce(_ || _)
 
-  /** [[composeAll]]'s strict check, as one eager action: the first seam
-    * a keyed touch or a NULL-keyed multiset breaks, thrown as a
-    * [[BrokenSeam]]. */
-  private def requireConsecutive(feeds: Seq[DataFrame], touches: DataFrame,
-                                 key: Seq[String], cols: Seq[String],
-                                 keysNullable: Boolean): Unit = {
-    val prev = lag(struct(col("_cf_pos"), col("_cf_rank"), col("_cf_img")), 1)
-      .over(Window.partitionBy(key.map(col): _*).orderBy("_cf_pos", "_cf_rank"))
-    // the state the earlier feed leaves vs the state the later one
-    // starts from; a touch whose predecessor is its own feed's pre-image
-    // is the second half of an update pair and asserts nothing
-    val keyedBreaks = touches.select(col("*"), prev.as("_cf_prev"))
-      .filter(col("_cf_prev").isNotNull &&
-        col("_cf_prev._cf_pos") =!= col("_cf_pos") &&
-        !(when(col("_cf_prev._cf_rank") === 1, col("_cf_prev._cf_img")) <=>
-          when(col("_cf_rank") === 0, col("_cf_img"))))
-      .select(lit("key").as("what"),
-        concat_ws(",", key.map(col(_).cast("string")): _*).as("which"),
-        col("_cf_prev._cf_pos").as("before"), col("_cf_pos").as("after"))
-    val breaks =
-      if (!keysNullable) keyedBreaks
-      else {
-        // seam s joins feed s and feed s+1: feed s's NULL-keyed inserts
-        // count +1 at s, feed s+1's NULL-keyed deletes −1 at s; a
-        // consecutive chain nets every (seam, row) to zero. The first
-        // feed's deletes and the last feed's inserts face no seam.
-        val signed = feeds.zipWithIndex.map { case (f, i) =>
-          f.filter(anyNull(key)).select(cols.map(col) ++ Seq(
-            when(isPre, i - 1).otherwise(i).as("_cf_seam"),
-            when(isPre, -1).otherwise(1).as("_cf_sign")): _*)
-        }.reduce(_ union _)
-          .filter(col("_cf_seam").between(0, feeds.size - 2))
-        keyedBreaks.union(signed
-          .groupBy((col("_cf_seam") +: cols.map(col)): _*)
-          .agg(sum("_cf_sign").as("_cf_net"))
-          .filter(col("_cf_net") =!= 0)
-          .select(lit("NULL-keyed row").as("what"),
-            concat_ws(",", cols.map(c =>
-              coalesce(col(c).cast("string"), lit("null"))): _*).as("which"),
-            col("_cf_seam").as("before"), (col("_cf_seam") + 1).as("after")))
-      }
-    breaks.limit(1).collect().headOption.foreach { b =>
-      throw new BrokenSeam(
-        s"feeds are not consecutive: ${b.getString(0)} (${b.getString(1)}) " +
-          s"leaves feed ${b.getInt(2)} in a state feed ${b.getInt(3)} " +
-          "does not start from", b.getInt(2), b.getInt(3))
-    }
+  private val nullKeyed = col("_cf_nimg").isNotNull
+
+  /** A strict group's first break, `(before, after, what, which)`, from
+    * its sorted touches; NULL when it chains. A NULL-keyed touch counts
+    * +1 (post-image at p) or −1 (pre-image at p) at seam p + rank − 1,
+    * which the sorted touches visit in order, so one fold nets each
+    * seam between feeds 0 and N−1. */
+  private def firstBreak(key: Seq[String], cols: Seq[String], n: Int): Column = {
+    val ts = col("_cf_ts")
+    def seam(before: Column, after: Column) = struct(before.as("before"), after.as("after"))
+    val keyed = array_min(zip_with(
+      slice(ts, lit(1), size(ts) - 1), slice(ts, lit(2), size(ts) - 1), (a, b) =>
+        when(a("_cf_pos") =!= b("_cf_pos") &&
+          !(when(a("_cf_rank") === 1, a("_cf_img")) <=>
+            when(b("_cf_rank") === 0, b("_cf_img"))),
+          seam(a("_cf_pos"), b("_cf_pos")))))
+    def unbalanced(acc: Column): Column = acc("n") =!= 0 && acc("s").between(0, n - 2)
+    val nullSeam = aggregate(ts,
+      struct(lit(-1).as("s"), lit(0).as("n"), lit(null).cast("int").as("bad")),
+      (acc, x) => {
+        val s = x("_cf_pos") + x("_cf_rank") - 1
+        val moved = s =!= acc("s")
+        struct(s.as("s"),
+          (when(moved, 0).otherwise(acc("n")) +
+            when(x("_cf_rank") === 1, 1).otherwise(-1)).as("n"),
+          coalesce(acc("bad"), when(moved && unbalanced(acc), acc("s"))).as("bad"))
+      },
+      acc => coalesce(acc("bad"), when(unbalanced(acc), acc("s"))))
+    val brk = when(nullKeyed, when(nullSeam.isNotNull, seam(nullSeam, nullSeam + 1)))
+      .otherwise(keyed)
+    when(brk.isNotNull, struct(brk("before").as("before"), brk("after").as("after"),
+      when(nullKeyed, lit("NULL-keyed row")).otherwise(lit("key")).as("what"),
+      when(nullKeyed, concat_ws(",", cols.map(c =>
+        coalesce(col("_cf_first._cf_img")(c).cast("string"), lit("null"))): _*))
+        .otherwise(concat_ws(",", key.map(col(_).cast("string")): _*)).as("which")))
   }
 
   /** APPLY a feed: replay the row-level changes onto the snapshot they

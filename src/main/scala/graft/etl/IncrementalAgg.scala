@@ -1425,10 +1425,10 @@ object IncrementalAgg {
     * Cost: ONE keyed aggregate over the unioned feeds + ONE
     * maintenance round, versus N maintenance rounds and N publishes
     * batch-by-batch — the compaction a woken-up consumer's ops schedule
-    * wants. `strict` forwards to [[ChangeFeed.composeAll]] (one eager
-    * consecutiveness check over the whole chain); a broken seam fails
-    * loudly naming this store's root and the batch ids on both sides
-    * of it, and nothing is committed. */
+    * wants. That aggregate is the round's one cache: the backlog is read
+    * once, stored or lazy, and `strict`'s check ([[ChangeFeed.composeAll]])
+    * materializes it. A broken seam fails loudly naming this store's
+    * root and the batch ids on both sides of it; nothing is committed. */
   def applyComposedMulti(spark: SparkSession, root: String,
                          feeds: Seq[(Long, DataFrame)], key: Seq[String],
                          views: Seq[TargetSpec],
@@ -1458,20 +1458,20 @@ object IncrementalAgg {
         "chain does not match the ledger")
     if (todo.isEmpty) 0
     else {
-      // materialized once for the round, same as applyOnceMulti: every
-      // view reads the net feed, and re-evaluating it would re-read and
-      // re-aggregate the whole backlog per view
-      val netFeed =
-        try ChangeFeed.composeAll(todo.map(_._2), key, strict).persist()
-        catch {
-          case e: ChangeFeed.BrokenSeam =>
-            throw new IllegalArgumentException(
-              s"catch-up of $root: batch ${todo(e.before)._1} → batch " +
-                s"${todo(e.after)._1}: ${e.getMessage}", e)
+      // the composition's one aggregate is the round's cache (see Cost)
+      var held = Option.empty[DataFrame]
+      try {
+        val netFeed = try ChangeFeed.composeHeld(todo.map(_._2), key, strict) { agg =>
+          held = Some(agg)
+          agg.persist()
+        } catch {
+          case e: ChangeFeed.BrokenSeam => throw new IllegalArgumentException(
+            s"catch-up of $root: batch ${todo(e.before)._1} → batch " +
+              s"${todo(e.after)._1}: ${e.getMessage}", e)
         }
-      try maintainRound(spark, root, snap, views.map(v => (v, netFeed)),
-        (applied ++ todo.map(_._1)).toDF("batch_id"))
-      finally { netFeed.unpersist(); () }
+        maintainRound(spark, root, snap, views.map(v => (v, netFeed)),
+          (applied ++ todo.map(_._1)).toDF("batch_id"))
+      } finally held.foreach(_.unpersist())
       todo.size
     }
   }

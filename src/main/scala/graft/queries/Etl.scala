@@ -299,10 +299,9 @@ object Etl {
     // survives batch 2 — but decile 1 rows UPDATED in batch 1 are
     // DELETED by batch 2, collapsing to plain deletes) net out exactly.
     // The feeds are MATERIALIZED once (o12's convention — the shape a
-    // ledger consumer actually holds): compose reads the first and last
-    // feed a second time when the key is schema-nullable (its NULL-keyed
-    // passthrough), so its inputs should be stored feeds, not lazy
-    // diff plans that would re-run their joins per reference.
+    // ledger consumer actually holds): compose is one keyed aggregate
+    // that reads each feed once, NULL-keyed rows included, so the plan
+    // scans each stored feed once instead of re-running a diff's joins.
     // The oracle computes the direct v1↔v3 classification relationally
     // — the composition path never appears in it, so the hash match
     // proves compose ≡ direct diff on real data.

@@ -235,7 +235,9 @@ class ChangeFeedSpec extends SparkSuite {
     // the 64 diffs are evaluated ONCE (one job) and held as stored feeds
     // — the shape a catching-up consumer holds — in two schemas: the
     // diff's own (nullable key, so the NULL-keyed strict check runs too)
-    // and a NON-nullable key for the plan pin below
+    // and a NON-nullable key for the plan pin below. Each is an RDD scan:
+    // the optimizer folds and prunes filters over local relations, which
+    // would hide a second read of a feed from the plan pin
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{StructField, StructType}
     val diffs = (0 until 64).map(i => ChangeFeed.diff(df(i), df(i + 1), Seq("id")))
@@ -243,7 +245,7 @@ class ChangeFeedSpec extends SparkSuite {
       .reduce(_ union _).collect().groupBy(_.getInt(4))
       .map { case (i, rs) => i -> rs.map(r => Row.fromSeq(r.toSeq.init)).toSeq }
     def stored(schema: StructType) = (0 until 64).map(i =>
-      spark.createDataFrame(java.util.Arrays.asList(rowsAt.getOrElse(i, Nil): _*), schema))
+      spark.createDataFrame(spark.sparkContext.parallelize(rowsAt.getOrElse(i, Nil), 1), schema))
     val feeds = stored(diffs.head.schema)
     val net = ChangeFeed.composeAll(feeds, Seq("id"), strict = true)
     val direct = ChangeFeed.diff(df(0), df(64), Seq("id"))
@@ -263,30 +265,62 @@ class ChangeFeedSpec extends SparkSuite {
       e.getMessage.contains(s"feed ${e.after} "), e.getMessage)
     // singleton chain is the identity
     assert(ChangeFeed.composeAll(Seq(feeds.head), Seq("id")) eq feeds.head)
-    // plan pin: with a NON-nullable key the composed feed is one keyed
-    // aggregate — no join and exactly one key exchange, at N = 64 the
-    // same as at N = 8 (AQE off so the tree is final)
+    // plan pin: the composed feed is one keyed aggregate that reads each
+    // feed once — no join, exactly one key exchange and exactly N scan
+    // leaves, at N = 64 the same as at N = 8 — for a NON-nullable key and
+    // for the diff's nullable one, whose NULL-keyed rows ride the same
+    // aggregate. The strict check is one action, and its plan is the same
+    // single pass. AQE off so the trees are final.
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
     val nonNullKey = stored(StructType(feeds.head.schema.map {
       case StructField("id", t, _, m) => StructField("id", t, nullable = false, m)
       case f => f
     }))
+    // `global`: the check's `min` adds one single-partition exchange
+    def onePass(plan: SparkPlan, n: Int, what: String, global: Boolean = false): Unit = {
+      assert(plan.collect { case j: BaseJoinExec => j }.isEmpty, s"$what has a join:\n$plan")
+      assert(plan.collect { case x: ShuffleExchangeExec => x.outputPartitioning match {
+        case _: HashPartitioning => "key"
+        case p => p.toString
+      } }.sorted === (if (global) Seq("SinglePartition", "key") else Seq("key")),
+        s"$what must shuffle once, on the key:\n$plan")
+      assert(plan.collectLeaves().size === n, s"$what must scan its $n feeds once:\n$plan")
+    }
+    // the plans of the actions `body` runs, in order: listener events
+    // arrive asynchronously but in order, so a fence action closes them
+    val ran = new LinkedBlockingQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        ran.put(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def actionPlans(body: => Unit): Seq[SparkPlan] = {
+      body
+      spark.range(1).toDF("_fence").collect()
+      Iterator.continually(ran.poll(60, TimeUnit.SECONDS))
+        .takeWhile(p => p.output.map(_.name) != Seq("_fence")).toSeq
+    }
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.listenerManager.register(listener)
     try {
-      for (n <- Seq(8, 64)) {
-        val plan = ChangeFeed.composeAll(nonNullKey.take(n), Seq("id"), strict = true)
-          .queryExecution.executedPlan
-        assert(plan.collect { case j: BaseJoinExec => j }.isEmpty,
-          s"N=$n composed plan has a join:\n$plan")
-        val exchanges = plan.collect { case x: ShuffleExchangeExec => x }
-        assert(exchanges.size === 1 &&
-          exchanges.head.outputPartitioning.isInstanceOf[HashPartitioning],
-          s"N=$n composed plan must shuffle once, on the key:\n$plan")
+      actionPlans(())
+      for (chain <- Seq(nonNullKey, feeds); n <- Seq(8, 64)) {
+        val what = s"N=$n ${if (chain eq feeds) "nullable" else "non-nullable"}-key"
+        onePass(ChangeFeed.composeAll(chain.take(n), Seq("id"))
+          .queryExecution.executedPlan, n, s"$what composed plan")
+        val check = actionPlans(ChangeFeed.composeAll(chain.take(n), Seq("id"), strict = true))
+        assert(check.size === 1, s"$what strict check must be one action")
+        onePass(check.head, n, s"$what strict check", global = true)
       }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
     assert(ChangeFeed.composeAll(nonNullKey, Seq("id"), strict = true)
       .as[(Int, String, Long, String)].collect().toSet ===
       direct.as[(Int, String, Long, String)].collect().toSet)

@@ -747,6 +747,87 @@ class DifferentialSpec extends SparkSuite {
     }
   }
 
+  test("differential: composeAll over random chains with NULL keys is the " +
+    "direct diff as a multiset, lenient and strict; strict rejects a " +
+    "substituted feed at its seam; a composed catch-up equals N rounds") {
+    import graft.etl.{ChangeFeed, IncrementalAgg}
+    import graft.etl.IncrementalAgg.ViewSpec
+    val value: Gen[(String, Option[Double])] = for {
+      g <- Gen.oneOf("a", "b", "c")
+      x <- Gen.option(Gen.chooseNum(-20, 20).map(_ / 4.0))
+    } yield (g, x)
+    // a version: keys 0..11, each present or not, plus a multiset of
+    // NULL-keyed rows drawn with repetition from a three-row pool — so
+    // duplicates, and NULL-keyed rows living through several versions
+    val version: Gen[Seq[(Option[Int], String, Option[Double])]] = for {
+      keyed <- Gen.listOfN(12, Gen.option(value))
+      n <- Gen.choose(0, 5)
+      nulls <- Gen.listOfN(n, Gen.oneOf(("a", Some(1.0)), ("b", None), ("c", Some(-2.5))))
+    } yield keyed.zipWithIndex.collect { case (Some((g, x)), k) => (Some(k), g, x) } ++
+      nulls.map { case (g, x) => (None, g, x) }
+    // planted on every chain: key 50 is born in v1 and dies in v4, key
+    // 51 changes in v1..v3 and reverts in v4 — both net to nothing
+    val chains = cases(Gen.listOfN(5, version), n = 3).map(_.zipWithIndex.map {
+      case (v, i) =>
+        v ++ (if (i > 0 && i < 4) Seq((Some(50), "born", Some(i.toDouble))) else Nil) :+
+          ((Some(51), "r", Some(if (i == 0 || i == 4) 5.0 else i.toDouble)))
+    })
+    def df(v: Seq[(Option[Int], String, Option[Double])]) =
+      v.toDF("id", "g", "x").repartition(3)
+    def feed(a: Seq[(Option[Int], String, Option[Double])],
+             b: Seq[(Option[Int], String, Option[Double])]) =
+      ChangeFeed.diff(df(a), df(b), Seq("id"))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.as[(Option[Int], String, Option[Double], String)].collect().toSeq.sortBy(_.toString)
+    val views = Seq(ViewSpec("by_g", Seq("g"), Seq("total" -> "x"), numBuckets = 2))
+    def view(root: String) =
+      IncrementalAgg.readView(spark, root, "by_g").collect().map(_.toSeq).toSet
+    val base = new java.io.File("target/test-sink/diff_compose_nullkeys").getAbsolutePath
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    chains.zipWithIndex.foreach { case (chain, salt) =>
+      val feeds = chain.sliding(2).map { case Seq(a, b) => feed(a, b) }.toSeq
+      val direct = rows(feed(chain.head, chain.last))
+      assert(rows(ChangeFeed.composeAll(feeds, Seq("id"))) === direct,
+        s"chain $salt: lenient composeAll != diff(v0, v4)")
+      assert(rows(ChangeFeed.composeAll(feeds, Seq("id"), strict = true)) === direct,
+        s"chain $salt: strict composeAll != diff(v0, v4)")
+      // substitute one feed at random: it starts from, or leads to, a
+      // version the chain never held. Every substitute carries an unseen
+      // NULL-keyed row, so each is detectable; a random other version
+      // breaks some seam touching the substituted feed, and the right
+      // version plus that row breaks exactly the NULL-keyed seam p-1|p
+      val rnd = new scala.util.Random(salt)
+      val p = 1 + rnd.nextInt(feeds.size - 1)
+      val fromSide = rnd.nextBoolean()
+      val at = if (fromSide) p else p - 1
+      def brokenBy(w: Seq[(Option[Int], String, Option[Double])]) =
+        intercept[ChangeFeed.BrokenSeam] {
+          ChangeFeed.composeAll(
+            if (fromSide) feeds.updated(p, feed(w, chain(p + 1)))
+            else feeds.updated(p - 1, feed(chain(p - 1), w)), Seq("id"), strict = true)
+        }
+      val sub = (Option.empty[Int], "sub", Some(9.0))
+      val e = brokenBy(chain(rnd.nextInt(chain.size)) :+ sub)
+      assert(e.before < e.after && e.before <= at && at <= e.after,
+        s"chain $salt: feed $at substituted, seam ${e.before}|${e.after}: ${e.getMessage}")
+      val n = brokenBy(chain(p) :+ sub)
+      assert((n.before, n.after) === ((p - 1, p)) && n.getMessage.contains("NULL-keyed"),
+        s"chain $salt: feed $at substituted, seam ${n.before}|${n.after}: ${n.getMessage}")
+      // one composed catch-up equals the batch-by-batch rounds
+      val (oneByOne, composed) = (s"$base/c$salt/rounds", s"$base/c$salt/composed")
+      Seq(oneByOne, composed).foreach(IncrementalAgg.publishInitialMulti(spark, _,
+        df(chain.head), views))
+      feeds.zipWithIndex.foreach { case (f, i) =>
+        assert(IncrementalAgg.applyOnceMulti(spark, oneByOne, f, i.toLong, views))
+      }
+      assert(IncrementalAgg.applyComposedMulti(spark, composed,
+        feeds.zipWithIndex.map { case (f, i) => i.toLong -> f }, Seq("id"), views,
+        strict = true) === feeds.size)
+      assert(view(composed) === view(oneByOne),
+        s"chain $salt: composed catch-up != ${feeds.size} single rounds")
+    }
+  }
+
   test("differential: minhashLsh always pairs exact duplicates and is order/partition-invariant") {
     val word: Gen[String] = Gen.oneOf("red", "blue", "green", "gold", "iron", "clay")
     val text: Gen[String] = Gen.chooseNum(8, 15)
