@@ -72,7 +72,7 @@ object Coordinator {
     // DRIVER-SIDE read (r20): a cut is |stores| rows — resolving it
     // through a Spark job per read was fixed latency on every
     // version-pinned read path; LocalParquet reads the same files
-    // in-process.
+    // in-process, and a repeat read of a version is memoized.
     LocalParquet.read(spark.sparkContext.hadoopConfiguration,
       s"${snap.root}/v${snap.version}/$StoresT", Seq("store", "version"))
       ._2.map(r => r.getString(0) -> r.getLong(1)).toMap

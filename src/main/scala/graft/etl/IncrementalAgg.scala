@@ -1,8 +1,10 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, Pmod}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DataType, DecimalType}
 
 /** Incremental maintenance of an additive aggregate under a
   * [[ChangeFeed]] — the materialized-view half of the CDC story: given
@@ -734,6 +736,20 @@ object IncrementalAgg {
   private def bucketExpr(groupCols: Seq[String], numBuckets: Int) =
     pmod(hash(groupCols.map(col): _*), lit(numBuckets))
 
+  /** [[bucketExpr]] evaluated driver-side on typed literals — the same
+    * `Pmod(Murmur3Hash(...))` the writer's `pmod(hash(...))` builds
+    * (seed 42), so it lands in the writer's bucket without a job or a
+    * DataFrame. */
+  private def bucketOf(values: Seq[Literal], numBuckets: Int): Int =
+    Pmod(new Murmur3Hash(values), Literal(numBuckets)).eval().asInstanceOf[Int]
+
+  /** `x` as a literal of the state column's type `dt`, converted the
+    * way a DataFrame row of that schema converts it — a decimal takes
+    * the column's scale, which its hash depends on — and validated by
+    * `Literal`: an Int for a bigint or a string column throws. */
+  private def typedLiteral(x: Any, dt: DataType): Literal =
+    Literal(CatalystTypeConverters.createToCatalystConverter(dt)(x), dt)
+
   /** Decoded manifest of one target's state. `bucketCols` is present
     * only when the writing spec recorded its layout (see
     * [[BucketColsBucket]]); readers must treat None as "pruning
@@ -758,7 +774,9 @@ object IncrementalAgg {
     // previous snap.table(...).collect() paid a scan job (plus the
     // read's file-listing job) per manifest per batch — the same bytes
     // arrive in-process at ~no scheduling cost. Layout unchanged, so
-    // Spark-written pre-existing manifests read identically.
+    // Spark-written pre-existing manifests read identically. Repeat
+    // reads of a version are memoized (LocalParquet's decode memo);
+    // the checks below still run on every read.
     val rows = LocalParquet.read(spark.sparkContext.hadoopConfiguration,
       s"${snap.root}/v${snap.version}/$table", Seq("bucket", "ref"))._2
     rows.find(_.getInt(0) == FormatBucket).map(_.getString(1)).foreach { f =>
@@ -881,10 +899,10 @@ object IncrementalAgg {
     * included — the hash is order-sensitive); any other or unrecorded
     * layout returns the FULL view, so the superset contract holds on
     * every store, including pre-layout-metadata ones. The bucket ids
-    * are computed DRIVER-SIDE over a local relation (no job): the same
-    * `pmod(hash(...))` expression the writer used, over rows typed by
-    * the state's own schema — a wrongly-typed value fails loudly at
-    * row construction rather than pruning to the wrong bucket. */
+    * are the writer's expression evaluated on typed literals, no
+    * DataFrame ([[bucketOf]]): each value becomes a literal of its
+    * state column's type ([[typedLiteral]]), so a wrongly-typed value
+    * fails loudly rather than pruning to the wrong bucket. */
   def readViewPruned(spark: SparkSession, root: String, view: String,
                      forCols: Seq[String], values: Seq[Seq[Any]],
                      version: Option[Long] = None): DataFrame = {
@@ -897,17 +915,11 @@ object IncrementalAgg {
     val pruned: Option[Map[Int, String]] =
       if (!m.bucketCols.contains(forCols) || values.isEmpty) None
       else {
-        val schema = org.apache.spark.sql.types.StructType(
-          forCols.map(org.apache.spark.sql.types.StructType
-            .fromDDL(m.schemaDDL).apply))
-        val local = spark.createDataFrame(
-          java.util.Arrays.asList(values.map(
-            v => org.apache.spark.sql.Row(v: _*)): _*), schema)
-        // local relation → Project folds to LocalTableScan: collect is
-        // driver-side, no job
-        val buckets = local
-          .select(bucketExpr(forCols, m.numBuckets).as("b"))
-          .collect().map(_.getInt(0)).toSet
+        val stateType = org.apache.spark.sql.types.StructType
+          .fromDDL(m.schemaDDL)
+        val buckets = values.map(v => bucketOf(forCols.zip(v).map {
+          case (c, x) => typedLiteral(x, stateType(c).dataType)
+        }, m.numBuckets)).toSet
         Some(m.refs.view.filterKeys(buckets).toMap)
       }
     val refs = pruned.getOrElse(m.refs)

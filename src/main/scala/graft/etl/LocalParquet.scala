@@ -31,8 +31,71 @@ import org.apache.spark.sql.Row
   * string). [[supported]] gates callers; anything richer must go
   * through a normal Spark write. At 100 TB nothing here changes:
   * these tables stay O(buckets + batches + stores) rows — the DATA
-  * never flows through this path. */
+  * never flows through this path.
+  *
+  * DECODE MEMO. Every table read here is immutable once written: it
+  * sits under a committed version dir, and every writer in the engine
+  * names its part files with a fresh UUID ([[write]]'s
+  * `part-00000-<uuid>`, Spark's `part-*-<job uuid>`). So [[read]]
+  * decodes each table once per JVM and serves repeat reads from a
+  * memo keyed by the listed part files' identity — (path, length,
+  * modification time) of each — plus `select`. The directory listing
+  * itself stays per call (well under 1 ms): a deleted dir still
+  * throws, and a dir deleted and re-published at the same path lists
+  * new part names, hence a new key, so it is never served stale. The
+  * memo is bounded by [[MemoRowBudget]] held rows with LRU eviction,
+  * because ledgers grow by a row per batch and an unbounded memo would
+  * grow with the process's history. Callers keep their own checks
+  * (format versions, schema rows) per call, on the returned rows. */
 object LocalParquet {
+
+  /** The memo's budget, in held rows (each entry weighs its row count
+    * plus one, so empty tables count too). A 64-bucket state manifest
+    * is 67 rows, so this holds ~1,000 of them; at ~200 bytes a row (a
+    * short string ref plus row overhead) that is ~13 MB of driver heap
+    * at most, independent of data size. A table heavier than the whole
+    * budget is read and not held. */
+  private[etl] val MemoRowBudget = 65536L
+
+  private final case class MemoKey(files: Seq[(String, Long, Long)],
+                                   select: Seq[String])
+
+  /** LRU by access order; the lock covers only map operations, never
+    * a decode, so concurrent first reads decode side by side and the
+    * first to publish wins ([[publish]] returns the held entry). */
+  private object Memo {
+    private val held =
+      new java.util.LinkedHashMap[MemoKey, (StructType, Seq[Row])](16, 0.75f, true)
+    private var weight = 0L
+
+    private def weigh(rows: Seq[Row]): Long = rows.size + 1L
+
+    def get(k: MemoKey): Option[(StructType, Seq[Row])] =
+      held.synchronized(Option(held.get(k)))
+
+    def publish(k: MemoKey, v: (StructType, Seq[Row])): (StructType, Seq[Row]) =
+      held.synchronized {
+        val prior = held.get(k)
+        if (prior != null) prior
+        else {
+          if (weigh(v._2) <= MemoRowBudget) {
+            held.put(k, v)
+            weight += weigh(v._2)
+            val it = held.values.iterator
+            while (weight > MemoRowBudget) {
+              weight -= weigh(it.next()._2)
+              it.remove()
+            }
+          }
+          v
+        }
+      }
+
+    def heldRows: Long = held.synchronized(weight)
+  }
+
+  /** Total weight the decode memo holds now (≤ [[MemoRowBudget]]). */
+  private[etl] def memoHeldRows: Long = Memo.heldRows
 
   /** Can `schema` round-trip through this writer? (Flat, primitive,
     * the types the metadata tables use.) */
@@ -109,15 +172,24 @@ object LocalParquet {
     * Spark schema recovered from the first file's footer. Column
     * `select` projects and ORDERS the result columns (they must exist
     * in the files). Fails loudly on nested/unsupported columns IN THE
-    * SELECTION — extra unsupported columns outside it are fine. */
+    * SELECTION — extra unsupported columns outside it are fine. A
+    * repeat read of unchanged part files returns the memoized result
+    * (the same rows, not a copy) — see the object's Scaladoc. */
   def read(conf: Configuration, dir: String,
            select: Seq[String]): (StructType, Seq[Row]) = {
     val fc = FileContext.getFileContext(conf)
-    val d = new Path(dir)
-    val it = fc.listStatus(d)
-    val parts = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+    val it = fc.listStatus(new Path(dir))
+    val listed = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath).toSeq.sortBy(_.getName)
+      .toSeq.sortBy(_.getPath.getName)
+    val key = MemoKey(listed.map(s =>
+      (s.getPath.toString, s.getLen, s.getModificationTime)), select)
+    Memo.get(key).getOrElse(
+      Memo.publish(key, decode(conf, dir, listed.map(_.getPath), select)))
+  }
+
+  private def decode(conf: Configuration, dir: String, parts: Seq[Path],
+                     select: Seq[String]): (StructType, Seq[Row]) = {
     val rows = Seq.newBuilder[Row]
     var schema: StructType = null
     parts.foreach { p =>

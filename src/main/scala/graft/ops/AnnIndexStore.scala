@@ -187,7 +187,8 @@ object AnnIndexStore {
     // DRIVER-SIDE read (r20): a manifest is O(segments) rows — the
     // per-read Spark job (scan + sort + collect) was fixed latency on
     // every append and serve; LocalParquet reads the same files
-    // in-process and the sort is a driver-side sortBy.
+    // in-process (a repeat read of a version is memoized) and the
+    // sort is a driver-side sortBy.
     val rows = LocalParquet.read(spark.sparkContext.hadoopConfiguration,
       s"${snap.root}/v${snap.version}/$ManifestT", Seq("seq", "kind", "ref"))
       ._2.sortBy(_.getInt(0)).toArray

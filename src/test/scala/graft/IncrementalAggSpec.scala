@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.etl.{ChangeFeed, IncrementalAgg}
 
@@ -762,9 +762,47 @@ class IncrementalAggSpec extends SparkSuite {
     // view — superset contract on any store, pruning never wrong
     assert(IncrementalAgg.readViewPruned(spark, root, "replica",
       Seq("id"), Seq(Seq[Any](3))).count() === v2.size.toLong)
-    // a wrongly-TYPED value fails loudly instead of pruning wrong
+    // the driver-side bucket id IS the writer's: for each bucket-column
+    // type (int, bigint, string, double, and a decimal, whose hash
+    // depends on the column's scale), for NULL and for a two-column
+    // layout, the one bucket a stored value's read opens equals
+    // pmod(hash(cols), B) as Spark evaluates it over a DataFrame
+    val typedRoot = s"${root}_typed"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(typedRoot))
+    val typedSchema = org.apache.spark.sql.types.StructType.fromDDL(
+      "id INT, i INT, l BIGINT, s STRING, d DOUBLE, m DECIMAL(12,2)")
+    def dec(s: String) = new java.math.BigDecimal(s)
+    val typedRows = Seq(
+      Row(0, 0, 0L, "", 0.0, dec("0")),
+      Row(1, 1, 1L, "g3", -3.25, dec("1.5")),
+      Row(2, -7, -7L, "ünï", 1e300, dec("-7.25")),
+      Row(3, Int.MaxValue, Long.MinValue, "x" * 40, -0.0, dec("9999999999.99")),
+      Row(4, null, null, null, null, null),
+      Row(5, 42, 42L, "42", Double.NaN, dec("42")))
+    // an RDD source, so the expected ids come from a real evaluation,
+    // not from folding over a local relation
+    val typedDf = spark.createDataFrame(
+      spark.sparkContext.parallelize(typedRows, 2), typedSchema)
+    val layouts = Seq("by_i" -> Seq("i"), "by_l" -> Seq("l"), "by_s" -> Seq("s"),
+      "by_d" -> Seq("d"), "by_m" -> Seq("m"), "by_si" -> Seq("s", "i"))
+    IncrementalAgg.publishInitialMulti(spark, typedRoot, typedDf, layouts.map {
+      case (n, cols) => ReplicaSpec(n, Seq("id"), numBuckets = 8, bucketOn = cols)
+    })
+    val expected = typedDf.select(col("id") +: layouts.map { case (n, cols) =>
+      pmod(hash(cols.map(col): _*), lit(8)).as(n)
+    }: _*).collect().map(r => r.getInt(0) -> r).toMap
+    for (r <- typedRows; ((n, cols), j) <- layouts.zipWithIndex) {
+      val v = cols.map(c => r.get(typedSchema.fieldIndex(c)))
+      assert(bucketsOpened(IncrementalAgg.readViewPruned(spark, typedRoot, n,
+        cols, Seq(v))) === Set(expected(r.getInt(0)).getInt(j + 1)),
+        s"$n: the pruned read of $v opened another bucket than the writer's")
+    }
+    // a wrongly-TYPED value fails loudly instead of pruning wrong: an
+    // Int for a string column, and an Int for a bigint one
     assertThrows[Exception](IncrementalAgg.readViewPruned(spark, root,
       "replica", Seq("g"), Seq(Seq[Any](42))).count())
+    assertThrows[Exception](IncrementalAgg.readViewPruned(spark, typedRoot,
+      "by_l", Seq("l"), Seq(Seq[Any](42))).count())
     // hygiene: bucketOn must name replica columns
     assertThrows[IllegalArgumentException](
       IncrementalAgg.publishInitialMulti(spark, root, df(v0),

@@ -24,15 +24,30 @@ ADD_OPENS = [f"--add-opens={p}=ALL-UNNAMED" for p in [
     "java.base/sun.security.action", "java.base/sun.util.calendar"]]
 
 
+def verify_heap_gb():
+    """Verify's -Xmx: 60% of the host's memory, leaving the rest for
+    DuckDB's replay and the OS, within [2, 48] GiB (48 GiB was the fixed
+    heap before, sized for a large host; on a 16 GB host it got the JVM
+    killed)."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return 2
+    return max(2, min(48, int(kb / 1048576 * 0.6)))
+
+
 def run_verify(sf_dir, out_dir):
     jar = [j for j in glob.glob(f"{REPO}/target/scala-2.13/*.jar")
            if not j.endswith(("-tests.jar", "-sources.jar", "-javadoc.jar"))]
     assert jar, "run `sbt package` first"
     cp = f"/opt/spark/jars/*:{jar[0]}"
-    cmd = ["java", *ADD_OPENS, "-Xmx48g", "-Dspark.ui.enabled=false",
+    cmd = ["java", *ADD_OPENS, f"-Xmx{verify_heap_gb()}g",
+           "-Dspark.ui.enabled=false",
            "-Dspark.sql.session.timeZone=UTC", "-cp", cp,
            "graft.Verify", sf_dir, out_dir]
-    env = dict(os.environ, SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    env = dict(os.environ, SPARK_GRAFT_CPUS=os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))))
     if run_verify.only:
         env["SPARK_GRAFT_ONLY"] = ",".join(run_verify.only)
     r = subprocess.run(cmd, env=env, capture_output=True, text=True)
